@@ -1,9 +1,9 @@
 """Spatial column functions.
 
-WebMercator tiling and footprint derivation are pure Column
-expressions — they compile into whole-stage codegen and cost no
+WebMercator tiling, hex/S2 cell ids and footprint derivation are pure
+Column expressions — they compile into whole-stage codegen and cost no
 Python round-trip (check: ``df.explain`` shows no ArrowEvalPython for
-tile_assign). Hex/S2 cell ids need the numpy kernels → pandas UDFs.
+tile_assign); ``kernels.cells`` holds their numpy twins for tests.
 
 Footprint contract (FIXTURES.md §1): the georeference of an image is
 derived ONLY from (phash, w, h):
@@ -17,10 +17,8 @@ derived ONLY from (phash, w, h):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gfp_gdal_spark.kernels import cells as _cells
 
@@ -281,16 +279,6 @@ def s2_cell(lon: Column, lat: Column, level: int) -> Column:
     else:
         hilbert = F.lit(0).cast("long")
     return face * F.lit(1 << (2 * level)) + hilbert
-
-
-def s2_cell_pd(lon: Column, lat: Column, level: int) -> Column:
-    """numpy-kernel twin of s2_cell (pandas UDF) — kept as the parity
-    reference for tests."""
-    @F.pandas_udf(T.LongType())
-    def _enc(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return pd.Series(_cells.s2_encode(lo.to_numpy(), la.to_numpy(), level))
-
-    return _enc(lon, lat)
 
 
 # ---------------------------------------------------------------------------

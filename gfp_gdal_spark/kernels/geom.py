@@ -32,6 +32,7 @@ __all__ = [
     "points_in_rings_pairwise",
     "point_in_polygon_pairwise",
     "points_in_polygons_indexed",
+    "scanline_burn",
     "rings_valid",
     "simplify_rings",
     "buffer_bbox_rings",
@@ -285,9 +286,81 @@ def points_in_polygons_indexed(
     return out
 
 
+def scanline_burn(px, py, flat, offsets, vals, hole_zone):
+    """Pixel-centre burn of one frame. Ring z < len(vals) of the ragged
+    table is zone z's exterior, with int64 value ``vals[z]``; ring
+    len(vals) + j is a hole of zone ``hole_zone[j]``. Centre (px[c],
+    py[r]) burns zone z iff it is in z's closed exterior bbox, odd-many
+    straddling exterior edges have ``px < xint``, and even-many of every
+    hole's — the comparisons of ``points_in_polygons_indexed`` (rings
+    with <3 vertices and NaN ``xint`` cross nothing), at one searchsorted
+    per (edge, straddled row). Returns flat (r * w + c) (min burned
+    value, burned mask)."""
+    h, w, n_ext = len(py), len(px), len(vals)
+    owner = np.r_[np.arange(n_ext), hole_zone].astype(np.int64)
+    canvas = np.full(h * w, np.iinfo(np.int64).max, dtype=np.int64)
+    burned = np.zeros(h * w, dtype=bool)
+    co, ro = np.argsort(px, kind="stable"), np.argsort(py, kind="stable")
+    xs, ys = px[co], py[ro]
+    counts = np.diff(offsets)
+    er = np.repeat(np.arange(len(counts)), counts)
+    idx, nxt = _segment_index(offsets)
+    x1, y1, x2, y2 = flat[idx, 0], flat[idx, 1], flat[nxt, 0], flat[nxt, 1]
+    # sorted rows with y > py form a prefix, so an edge straddles one row
+    # run (an edge with a NaN end gets a NaN xint and is dropped below)
+    k1, k2 = np.searchsorted(ys, y1), np.searchsorted(ys, y2)
+    ne = np.abs(k1 - k2) * (counts[er] >= 3)
+    e = np.repeat(np.arange(len(er)), ne)
+    j = np.arange(len(e)) - np.repeat(np.cumsum(ne) - ne, ne) + np.minimum(k1, k2)[e]
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        xint = (x2[e] - x1[e]) * (ys[j] - y1[e]) / (y2[e] - y1[e]) + x1[e]
+    ok = ~np.isnan(xint)
+    g, k = er[e[ok]] * h + j[ok], np.searchsorted(xs, xint[ok])
+    if not len(k):
+        return canvas, burned
+    o = np.lexsort((k, g))
+    g, k = g[o], k[o]
+    # per (ring, row), crossings k_1 <= .. <= k_m: sorted columns in
+    # [k_{m-1}, k_m), [k_{m-3}, k_{m-2}), .. (and [0, k_1) for odd m)
+    # have an odd count of crossings to their right
+    first = np.r_[True, g[1:] != g[:-1]]
+    last = np.flatnonzero(np.r_[g[1:] != g[:-1], True])
+    i = np.flatnonzero((last[np.cumsum(first) - 1] - np.arange(len(g))) % 2 == 0)
+    rr, j, c0, c1 = g[i] // h, g[i] % h, np.where(first[i], 0, k[i - 1]), k[i]
+    # clamp every run to its zone's closed exterior bbox (hole runs
+    # outside it cover no burned pixel of that zone)
+    b = ring_bbox(flat[: offsets[n_ext]], offsets[: n_ext + 1])[owner[rr]]
+    c0 = np.maximum(c0, np.searchsorted(xs, b[:, 0]))
+    c1 = np.minimum(c1, np.searchsorted(xs, b[:, 2], "right"))
+    row_in = (j >= np.searchsorted(ys, b[:, 1])) & (j < np.searchsorted(ys, b[:, 3], "right"))
+    n = np.where(row_in, np.maximum(c1 - c0, 0), 0)
+    ri = np.repeat(np.arange(len(n)), n)
+    pix = ro[j[ri]] * w + co[np.arange(len(ri)) - np.repeat(np.cumsum(n) - n, n) + c0[ri]]
+    zone, hole = owner[rr[ri]], rr[ri] >= n_ext
+    key = zone * (h * w) + pix
+    keep = ~hole & ~np.isin(key, key[hole])
+    np.minimum.at(canvas, pix[keep], vals[zone[keep]])
+    burned[pix[keep]] = True
+    return canvas, burned
+
+
 # ---------------------------------------------------------------------------
 # validity (self-intersection) — S8 `is_valid` (ogr_reader_node.cpp:265,276)
 # ---------------------------------------------------------------------------
+
+def _pow2_normalized(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """The rings' xy scaled, ring by ring, by the power of two that puts
+    the largest |coordinate| in [0.5, 1). Only exponents change, so
+    every sign, zero test and crossing verdict is that of the unscaled
+    arithmetic, minus its overflow: cross products of coordinates
+    beyond ~1e154 overflow to inf/NaN unscaled."""
+    counts = np.diff(offsets)
+    m = np.zeros(len(counts))
+    ne = counts > 0
+    if ne.any():
+        m[ne] = np.maximum.reduceat(np.abs(flat[:, :2]).max(axis=1), offsets[:-1][ne])
+    return np.ldexp(flat[:, :2], -np.repeat(np.frexp(m)[1], counts)[:, None])
+
 
 def _ring_self_intersects(pts: np.ndarray) -> bool:
     """Proper-intersection test among non-adjacent segments of one closed
@@ -295,6 +368,7 @@ def _ring_self_intersects(pts: np.ndarray) -> bool:
     n = pts.shape[0]
     if n < 4:
         return False
+    pts = _pow2_normalized(pts, np.array([0, n]))
     a = pts
     b = np.roll(pts, -1, axis=0)
     i, j = np.triu_indices(n, k=2)
@@ -308,7 +382,11 @@ def _ring_self_intersects(pts: np.ndarray) -> bool:
     qp = q - p
     t_num = qp[:, 0] * s[:, 1] - qp[:, 1] * s[:, 0]
     u_num = qp[:, 0] * r[:, 1] - qp[:, 1] * r[:, 0]
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):  # over: huge-coordinate cross terms overflow to inf, masked by the straddle gate (VERDICT r5 #7)
+    # the normalized coordinates keep every cross term finite; only a
+    # parallel pair (rxs == 0) makes t/u inf or NaN, and it fails
+    # ``proper`` (rxs != 0, and NaN compares false) and goes to the
+    # collinear-overlap test below
+    with np.errstate(divide="ignore", invalid="ignore"):
         t = t_num / rxs
         u = u_num / rxs
     proper = (rxs != 0) & (t > 0) & (t < 1) & (u > 0) & (u < 1)
@@ -370,9 +448,12 @@ def _ring_output_invalid(pts: np.ndarray) -> bool:
 
 
 def rings_valid(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Per-ring validity: >=3 vertices, nonzero area, no self-intersection."""
+    """Per-ring validity: >=3 vertices, nonzero area, no self-intersection.
+    Decided on power-of-two normalized rings, so huge coordinates get
+    the same verdict as their scaled-down copies."""
     n = len(offsets) - 1
     counts = offsets[1:] - offsets[:-1]
+    flat = _pow2_normalized(flat, offsets)
     area = signed_area(flat, offsets)
     out = (counts >= 3) & (area != 0.0)
     for i in np.flatnonzero(out):
@@ -478,18 +559,6 @@ def buffer_bbox_rings(flat: np.ndarray, offsets: np.ndarray, offset: float):
         np.concatenate(out_rings, axis=0) if new_off[-1] else np.empty((0, 2), np.float64)
     )
     return new_flat, new_off, ok
-
-
-def _is_convex_ccw(pts: np.ndarray) -> bool:
-    """All turns left (cross >= 0, at least one > 0) for an unclosed ring."""
-    n = pts.shape[0]
-    if n < 3:
-        return False
-    a = pts[:, :2]
-    b = np.roll(a, -1, axis=0)
-    c = np.roll(a, -2, axis=0)
-    cr = (b[:, 0] - a[:, 0]) * (c[:, 1] - b[:, 1]) - (b[:, 1] - a[:, 1]) * (c[:, 0] - b[:, 0])
-    return bool((cr > -1e-30).all() and (cr > 0).any())
 
 
 def buffer_convex_rings(

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from gfp_gdal_spark.functions.geometry import haversine_m, pip_refine
+from gfp_gdal_spark.functions.geometry import haversine_m
 from gfp_gdal_spark.functions.spatial import (
     hex_cell,
     hex_cover_range_cols,
@@ -83,8 +83,9 @@ def _fan_out(df: DataFrame, min_frac: float = 0.5) -> DataFrame:
        files (exact input bytes; covers the file-scan plans this guard
        exists for). Remote URIs (s3/hdfs) skip to 2.
     2. Optimizer size stats via the internal queryExecution handle —
-       fallback only (brittle across Spark upgrades, VERDICT r5 #6).
-    3. If both fail: assume narrow and repartition.
+       fallback only (brittle across Spark upgrades).
+    3. If both fail: leave the plan alone (the size is unknown, and a
+       blind repartition could shuffle a huge derived input).
     """
     import os as _os
     from urllib.parse import unquote, urlparse
@@ -755,7 +756,12 @@ def pip_join(
         # k-gon layers).
         from gfp_gdal_spark.functions.spatial import rect_bounds_col
 
-        polys = polys.withColumn("_pr", rect_bounds_col(F.col(ring)))
+        # helper column under a name neither side uses, so no caller
+        # column is overwritten or dropped
+        pr = "_pr"
+        while pr in polys.columns or pr in points.columns:
+            pr += "_"
+        polys = polys.withColumn(pr, rect_bounds_col(F.col(ring)))
     if bucket == "hex":
         pcells = cover_cells_hex(polys, res, ring, keep_bbox=True)
     elif bucket == "s2":
@@ -833,11 +839,11 @@ def pip_join(
 
         hole_c = F.col(hole_arg) if hole_arg else None
         refined = joined.where(
-            pip_refine_rect_col(F.col(lon), F.col(lat), F.col(ring), F.col("_pr"), hole_c)
+            pip_refine_rect_col(F.col(lon), F.col(lat), F.col(ring), F.col(pr), hole_c)
         )
         if keep_geometry:
-            return refined.drop("cell", "_pr")
-        return refined.drop("cell", "_pr", *([ring] + ([hole_arg] if hole_arg else [])))
+            return refined.drop("cell", pr)
+        return refined.drop("cell", pr, *([ring] + ([hole_arg] if hole_arg else [])))
 
     if keep_geometry:
         return pip_filter_arrow(joined, lon, lat, ring, hole_arg).drop("cell")

@@ -575,150 +575,89 @@ def rasterize_zones(
     fmt: str = "pgm",
     **pip_kwargs,
 ) -> DataFrame:
-    """Vector -> raster burning (the `gdal_rasterize` analog, closing
-    the raster<->vector bridge in BOTH directions beside
+    """Vector -> raster burning (the `gdal_rasterize` analog, beside
     map_algebra.zonal_stats): for each output frame (a georeferenced
-    w x h grid over its bbox, north-up), every pixel whose CENTER
-    falls strictly inside a zone polygon is burned with that zone's
-    ``value`` (overlapping zones -> the MINIMUM value, a deterministic
-    painter's rule); all other pixels stay ``nodata``.
+    w x h grid over its bbox, north-up), every pixel whose CENTER falls
+    strictly inside a zone polygon is burned with that zone's ``value``
+    cast to long (overlapping zones -> the MINIMUM value, a
+    deterministic painter's rule); other pixels stay ``nodata``. Zones
+    whose ``value`` is NULL or NaN are skipped: they burn nothing.
 
-    Plan — every stage is a certified primitive:
-    1. pixel centers: one explode per frame (w*h rows, the exact
-       inverse of raster_to_points' geotransform — bounded per task
-       like any tile fan-out);
-    2. the cell-bucketed ``pip_join`` against the zone layer
-       (broadcast/shuffle/salting knobs pass through ``pip_kwargs``) —
-       never all-pairs;
-    3. one (frame, pixel) min-value agg, then one per-frame
-       collect_list of the BURNED pixels only (sparse: collect size =
-       burned count <= w*h, not the dense grid);
-    4. a mapInPandas pass scatters all burned pixels of a uniform
-       (w, h) group into the dense canvas with ONE fancy-index
-       assignment and encodes via ``codec.encode_group``.
-
-    Returns (key, w, h, n_burned, val_sum, bytes, fmt); ``val_sum``
-    sums the burned integer values JVM-side (exact).
+    Plan (Raptor-style scanline, no per-pixel rows): a broadcast
+    bbox-overlap LEFT join attaches every zone whose exterior bbox
+    meets a frame's (a frame with no zone still emits an all-nodata
+    raster); one group per frame collects its zones; one mapInArrow
+    pass reads the rings from the Arrow buffers, burns each frame with
+    ``kernels.geom.scanline_burn`` (bit-identical to the pixel-centre
+    PiP rule) and encodes it. Of ``pip_kwargs`` only the ``ring`` and
+    ``holes`` column names are read; the pip_join bucketing knobs
+    (``z``, ``broadcast``, ...) are accepted and have nothing to tune.
+    Returns (key, w, h, n_burned, val_sum, bytes, fmt), counts exact.
     """
-    mnx, mny, mxx, mxy = bbox_cols
-    w_c, h_c = F.col("w").cast("int"), F.col("h").cast("int")
+    from gfp_gdal_spark.kernels.geom import scanline_burn
+    from gfp_gdal_spark.operators.joins import ring_bbox_cols
+
+    ring, holes = pip_kwargs.get("ring", "ring"), pip_kwargs.get("holes", "holes")
+    hole_c = F.col(holes) if holes in zones.columns else F.lit(None)
+    z = ring_bbox_cols(zones.where(F.col(value).isNotNull() & ~F.isnan(value)).select(
+        F.col(ring).alias("r"),
+        hole_c.cast("array<array<array<double>>>").alias("h"),
+        F.col(value).cast("long").alias("v"),
+    ), "r")
+    x0, y0, x1, y1 = (F.col(c).cast("double") for c in bbox_cols)
     fr = frames.select(
-        F.col(key).alias("_k"),
-        F.col(mnx).cast("double").alias("_x0"),
-        F.col(mny).cast("double").alias("_y0"),
-        F.col(mxx).cast("double").alias("_x1"),
-        F.col(mxy).cast("double").alias("_y1"),
-        w_c.alias("_w"),
-        h_c.alias("_h"),
+        F.monotonically_increasing_id().alias("_fid"), F.col(key).cast("string").alias("_k"),
+        x0.alias("_x0"), y0.alias("_y0"), x1.alias("_x1"), y1.alias("_y1"),
+        F.col("w").cast("int").alias("_w"), F.col("h").cast("int").alias("_h"),
     )
-    g = (
-        fr.withColumn("_r", F.explode(F.sequence(F.lit(0), F.col("_h") - 1)))
-        .withColumn("_c", F.explode(F.sequence(F.lit(0), F.col("_w") - 1)))
+    overlap = (
+        (F.col("min_lon") <= F.greatest("_x0", "_x1")) & (F.col("max_lon") >= F.least("_x0", "_x1"))
+        & (F.col("min_lat") <= F.greatest("_y0", "_y1")) & (F.col("max_lat") >= F.least("_y0", "_y1"))
     )
-    centers = g.select(
-        "_k",
-        "_w",
-        "_h",
-        (F.col("_r") * F.col("_w") + F.col("_c")).alias("_pix"),
-        (
-            F.col("_x0")
-            + (F.col("_c").cast("double") + 0.5)
-            * (F.col("_x1") - F.col("_x0"))
-            / F.col("_w").cast("double")
-        ).alias("lon_c"),
-        (
-            F.col("_y1")
-            - (F.col("_r").cast("double") + 0.5)
-            * (F.col("_y1") - F.col("_y0"))
-            / F.col("_h").cast("double")
-        ).alias("lat_c"),
+    grouped = (
+        fr.join(F.broadcast(z), overlap, "left")
+        .groupBy("_fid", "_k", "_x0", "_y0", "_x1", "_y1", "_w", "_h")
+        .agg(F.collect_list(F.when(F.col("v").isNotNull(), F.struct("r", "h", "v"))).alias("_z"))
     )
-    from gfp_gdal_spark.operators.joins import pip_join, ring_bbox_cols
+    names = [key, "w", "h", "n_burned", "val_sum", "bytes", "fmt"]
+    types = ["string", "int", "int", "long", "long", "binary", "string"]
+    nd, out_fmt = nodata, fmt
 
-    # pre-filter the zone layer to the frames' union bbox BEFORE the
-    # pip_join replicates it over cover cells (guide-§3.2 shape: shrink
-    # the build side first). A zone whose bbox misses every frame
-    # cannot contain any pixel center, so the burned output is
-    # identical; the win is a proportionally smaller broadcast/shuffle
-    # build when the frame set covers a fraction of the layer extent
-    # (the common tiling-job case). One cheap scalar agg over frames.
-    ext = fr.agg(
-        F.min("_x0").alias("x0"), F.min("_y0").alias("y0"),
-        F.max("_x1").alias("x1"), F.max("_y1").alias("y1"),
-    ).first()
-    if ext and ext.x0 is not None:
-        ring_col = pip_kwargs.get("ring", "ring")
-        zb = ring_bbox_cols(zones, ring_col)
-        zones = zb.where(
-            (F.col("min_lon") <= F.lit(ext.x1)) & (F.col("max_lon") >= F.lit(ext.x0))
-            & (F.col("min_lat") <= F.lit(ext.y1)) & (F.col("max_lat") >= F.lit(ext.y0))
-        ).drop("min_lon", "min_lat", "max_lon", "max_lat")
+    def offs(a):  # an empty list array may come with no offsets buffer
+        return a.offsets.to_numpy().astype(np.int64) if len(a) else np.zeros(1, np.int64)
 
-    hit = pip_join(centers, zones, **pip_kwargs)
-    burned = hit.groupBy("_k", "_w", "_h", "_pix").agg(
-        F.min(F.col(value)).alias("_v")
-    )
-    agg = burned.groupBy("_k", "_w", "_h").agg(
-        F.count(F.lit(1)).alias("n_burned"),
-        F.sum(F.col("_v").cast("long")).alias("val_sum"),
-        F.collect_list(F.struct("_pix", "_v")).alias("_px"),
-    )
-    # frames with zero burned pixels still emit an (all-nodata) raster
-    agg = fr.select("_k", "_w", "_h").join(agg, ["_k", "_w", "_h"], "left")
-    schema = (
-        f"{key} string, w int, h int, n_burned long, val_sum long, "
-        f"bytes binary, fmt string"
-    )
-    nd = nodata
-    out_fmt = fmt
+    def pts(a):  # list<list<double>> -> (ring offsets, (n, 2) vertices)
+        d, po = a.values.values.to_numpy(zero_copy_only=False), offs(a.values)[:-1]
+        return offs(a), np.stack([d[po], d[po + 1]], 1)
 
     def op(batches):
-        import collections
-
-        import pandas as pd
-
         tune_worker()
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            groups = collections.defaultdict(list)
-            for i in range(n):
-                groups[(int(pdf["_w"].iat[i]), int(pdf["_h"].iat[i]))].append(i)
-            out_b: list = [None] * n
-            for (w, h), idxs in groups.items():
-                m = len(idxs)
-                canvas = np.full((m, h * w), nd, dtype=np.float64)
-                ri, pi, vi = [], [], []
-                for j, i in enumerate(idxs):
-                    px = pdf["_px"].iat[i]
-                    if px is None:
-                        continue
-                    for cell in px:
-                        ri.append(j)
-                        pi.append(cell["_pix"])
-                        vi.append(cell["_v"])
-                if ri:
-                    canvas[np.asarray(ri), np.asarray(pi)] = np.asarray(
-                        vi, dtype=np.float64
-                    )
-                pix = np.clip(canvas, 0, 255).astype(np.uint8).reshape(m, h, w)
-                enc = _codec.encode_group(pix, out_fmt)
-                for j, i in enumerate(idxs):
-                    out_b[i] = enc[j]
-            yield pd.DataFrame(
-                {
-                    key: pdf["_k"].astype(str),
-                    "w": pdf["_w"].astype("int32"),
-                    "h": pdf["_h"].astype("int32"),
-                    "n_burned": pdf["n_burned"].fillna(0).astype("int64"),
-                    "val_sum": pdf["val_sum"].fillna(0).astype("int64"),
-                    "bytes": out_b,
-                    "fmt": out_fmt,
-                }
-            )
+        for b in batches:
+            col = {c: b.column(c) for c in b.schema.names}
+            r, h, v = col["_z"].values.flatten()
+            (ro, rv), (hro, hv), zo, ho, v = pts(r), pts(h.values), offs(col["_z"]), offs(h), v.to_numpy()
+            x0, y0, x1, y1, w, hh = (col[c].to_numpy() for c in ("_x0", "_y0", "_x1", "_y1", "_w", "_h"))
+            n, s, enc = [], [], []
+            for f in range(b.num_rows):
+                a, e = zo[f], zo[f + 1]
+                px = x0[f] + ((np.arange(w[f]) + 0.5) * (x1[f] - x0[f])) / w[f]
+                py = y1[f] - ((np.arange(hh[f]) + 0.5) * (y1[f] - y0[f])) / hh[f]
+                eo, hs = ro[a : e + 1] - ro[a], hro[ho[a] : ho[e] + 1] - hro[ho[a]]
+                canvas, burned = scanline_burn(
+                    px, py, np.concatenate([rv[ro[a] : ro[e]], hv[hro[ho[a]] : hro[ho[e]]]]),
+                    np.concatenate([eo, hs[1:] + eo[-1]]),
+                    v[a:e], np.repeat(np.arange(e - a), np.diff(ho[a : e + 1])),
+                )
+                pix = np.clip(np.where(burned, canvas, nd), 0, 255).astype(np.uint8)
+                n.append(int(burned.sum()))
+                s.append(int(canvas[burned].sum()))
+                enc.append(_codec.encode_group(pix.reshape(1, hh[f], w[f]), out_fmt)[0])
+            yield pa.RecordBatch.from_arrays([
+                col["_k"], col["_w"], col["_h"], pa.array(n, pa.int64()), pa.array(s, pa.int64()),
+                pa.array(enc, pa.binary()), pa.array([out_fmt] * b.num_rows, pa.string()),
+            ], names=names)
 
-    return agg.mapInPandas(op, schema)
+    return grouped.mapInArrow(op, ", ".join(f"{c} {t}" for c, t in zip(names, types)))
 
 
 def reproject_webmercator(

@@ -50,6 +50,20 @@ def test_pip_join_matches_brute_force(spark, points, brute_lonlat, broadcast):
     assert got_pairs == brute_pip_pairs(lon, lat, datagen.vector_layer_pandas(N_POLY))
 
 
+def test_pip_join_keeps_caller_pr_columns(spark, points, brute_lonlat):
+    """A caller column named like the rect fast path's helper (``_pr``)
+    on either side is neither overwritten nor dropped."""
+    vl = datagen.vector_layer(spark, N_POLY).withColumn("_pr", F.col("polygon_id") * 10)
+    pts = points.withColumn("_pr_", F.lit("p"))
+    got = J.pip_join(pts, vl, z=4, broadcast=True)
+    assert "_pr" in got.columns and "_pr_" in got.columns
+    rows = got.select("image_id", "polygon_id", "_pr", "_pr_").toPandas()
+    assert (rows["_pr"] == rows["polygon_id"] * 10).all() and (rows["_pr_"] == "p").all()
+    lon, lat = brute_lonlat
+    got_pairs = set(map(tuple, rows[["image_id", "polygon_id"]].values))
+    assert got_pairs == brute_pip_pairs(lon, lat, datagen.vector_layer_pandas(N_POLY))
+
+
 @pytest.mark.parametrize("broadcast", [True, False])
 def test_pip_join_hex_bucket_matches_brute_force(spark, points, brute_lonlat, broadcast):
     """Hex bucketing (H3-style). Zone-scale polygons: hex cover cost is

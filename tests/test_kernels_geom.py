@@ -70,6 +70,19 @@ def test_validity():
     assert G.rings_valid(flat, off).tolist() == [True, False, False]
 
 
+@pytest.mark.parametrize("scale", [1.0, 1e300, 1e-300])
+def test_validity_huge_coordinates(scale):
+    """The verdict does not depend on a uniform scale: at 1e300 every
+    unscaled cross product overflows to inf/NaN, which must neither hide
+    a crossing nor make a zero-area ring look valid."""
+    rings = [SQUARE, BOWTIE, [[-1.0, -1.0], [0.0, 0.0], [1.0, 1.0]],
+             [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [1.0, -1.0]]]
+    flat, off = ragged([(np.asarray(r) * scale).tolist() for r in rings])
+    with np.errstate(all="raise"):
+        got = G.rings_valid(flat, off).tolist()
+    assert got == [True, False, False, False]
+
+
 def test_simplify_passthrough_and_reduction():
     noisy = [[0.0, 0.0], [1.0, 0.001], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0]]
     degenerate = [[0.0, 0.0], [1.0, 0.0]]

@@ -103,6 +103,26 @@ def test_pip_join_arrow_refine_still_available(spark, images_path):
     assert "_bx0" in plan and "_bx1" in plan  # prefilter ahead of the Arrow boundary
 
 
+def test_rasterize_zones_scanline_plan(spark):
+    """rasterize_zones burns by scanline: no per-pixel explode over
+    sequence(0, w-1), no cell equi-join, and exactly one Python node
+    (the MapInArrow burn)."""
+    from gfp_gdal_spark.operators.raster import rasterize_zones
+
+    frames = spark.createDataFrame(
+        [("a", 0.0, 0.0, 10.0, 10.0, 8, 8)],
+        "image_id string, min_lon double, min_lat double, max_lon double, max_lat double, w int, h int",
+    )
+    zones = datagen.vector_layer_zones(spark, 50).withColumn("zval", F.col("polygon_id") % 7)
+    plan = plan_of(rasterize_zones(frames, zones, value="zval", z="auto", broadcast=True))
+    assert "Generate" not in plan and "sequence" not in plan, plan
+    for join in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
+        assert join not in plan, plan
+    assert "BroadcastNestedLoopJoin BuildRight, LeftOuter" in plan, plan
+    py_nodes = [ln for ln in plan.splitlines() if any(m in ln for m in PY_MARKERS)]
+    assert len(py_nodes) == 1 and "MapInArrow" in py_nodes[0], plan
+
+
 def test_knn_join_plan_is_pure_jvm(spark):
     """knn_join (hex encode + kring expansion + haversine, all Column
     exprs) must plan zero Python nodes per round."""
