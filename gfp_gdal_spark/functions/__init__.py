@@ -25,5 +25,4 @@ from gfp_gdal_spark.functions.geometry import (  # noqa: F401
     ring_is_valid,
     ring_wkt,
     orient_ring,
-    pip_refine,
 )

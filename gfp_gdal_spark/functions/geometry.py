@@ -41,7 +41,8 @@ def ring_is_ccw(ring: Column) -> Column:
     @F.pandas_udf(T.BooleanType())
     def _f(s: pd.Series) -> pd.Series:
         flat, off = _ragged(s)
-        return pd.Series(_g.signed_area(flat, off) > 0)
+        # sign of the normalized area: unscaled cross terms overflow
+        return pd.Series(_g.signed_area(_g._pow2_normalized(flat, off), off) > 0)
 
     return _f(ring)
 
@@ -226,35 +227,6 @@ def linestring_wkt(points: Column) -> Column:
         ),
         F.lit(")"),
     )
-
-
-def pip_refine(px: Column, py: Column, ring: Column, holes: Column | None = None) -> Column:
-    """Exact point-in-polygon (ray cast, holes honored) — the refine
-    stage of pip_join after the cell-bucket equi-join."""
-    if holes is None:
-        @F.pandas_udf(T.BooleanType())
-        def _f(x: pd.Series, y: pd.Series, r: pd.Series) -> pd.Series:
-            flat, off = _ragged(r)
-            return pd.Series(
-                _g.points_in_rings_pairwise(x.to_numpy(float), y.to_numpy(float), flat, off)
-            )
-
-        return _f(px, py, ring)
-
-    import json
-
-    @F.pandas_udf(T.BooleanType())
-    def _fh(x: pd.Series, y: pd.Series, r: pd.Series, hs: pd.Series) -> pd.Series:
-        flat, off = _ragged(r)
-        holes_rows = [None if h is None else json.loads(h) for h in hs]
-        return pd.Series(
-            _g.point_in_polygon_pairwise(
-                x.to_numpy(float), y.to_numpy(float), flat, off, holes_rows
-            )
-        )
-
-    # holes cross the Arrow boundary as JSON (see ring_wkt note)
-    return _fh(px, py, ring, F.to_json(holes))
 
 
 def haversine_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:

@@ -286,8 +286,8 @@ def s2_cell(lon: Column, lat: Column, level: int) -> Column:
 # functions). Bit-for-bit the same half-open ray cast as
 # kernels.geom.points_in_rings_pairwise: same float64 formula
 #   xint = (x2-x1)*(py-y1)/(y2-y1) + x1 ; hit = straddle & (px < xint)
-# so the JVM and Arrow refine paths return identical rows. Keeping the
-# refine JVM-side is what makes pip_join scale linearly with cores —
+# so the JVM refine and its numpy oracle return identical rows. Keeping
+# the refine JVM-side is what makes pip_join scale linearly with cores —
 # the Python-worker path was the measured non-scaling component.
 # ---------------------------------------------------------------------------
 
@@ -306,16 +306,6 @@ def ring_crossings_col(px: Column, py: Column, ring: Column) -> Column:
 
     crossings = F.size(F.filter(F.sequence(F.lit(0), n - 1), _hit))
     return (crossings % 2 == 1) & (n >= 3)
-
-
-def pip_refine_col(px: Column, py: Column, ring: Column, holes: Column | None = None) -> Column:
-    """Exact PiP (exterior ring minus holes) as a pure JVM expression —
-    the zero-Python refine stage of pip_join."""
-    inside = ring_crossings_col(px, py, ring)
-    if holes is not None:
-        in_hole = F.exists(holes, lambda h: ring_crossings_col(px, py, h))
-        inside = inside & ~F.coalesce(in_hole, F.lit(False))
-    return inside
 
 
 def rect_bounds_col(ring: Column) -> Column:
@@ -347,9 +337,11 @@ def rect_bounds_col(ring: Column) -> Column:
 def pip_refine_rect_col(
     px: Column, py: Column, ring: Column, rect: Column, holes: Column | None = None
 ) -> Column:
-    """``pip_refine_col`` with the axis-aligned-rectangle fast path
-    (bit-identical, not approximate). ``rect`` is ``rect_bounds_col``'s
-    nullable struct, precomputed on the polygon side.
+    """Exact PiP (exterior ring minus holes) as a pure JVM expression —
+    the refine stage of pip_join — with an axis-aligned-rectangle fast
+    path (bit-identical, not approximate). ``rect`` is
+    ``rect_bounds_col``'s nullable struct, precomputed on the polygon
+    side.
 
     Equivalence: for the detected rect shape the half-open ray cast
     reduces EXACTLY to

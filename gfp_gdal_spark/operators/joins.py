@@ -29,7 +29,8 @@ from gfp_gdal_spark.functions.spatial import (
     hex_cover_range_cols,
     hex_kring,
     hex_pack_cols,
-    pip_refine_col,
+    pip_refine_rect_col,
+    rect_bounds_col,
     ring_crossings_col,
     tile_cols,
     tile_cover_cols,
@@ -506,120 +507,42 @@ def cover_cells_tile(
 # point-in-polygon join
 # ---------------------------------------------------------------------------
 
-def _pip_join_broadcast_rings(
-    points: DataFrame, polys: DataFrame, z: int, lon: str, lat: str,
-    ring: str, holes: str | None, bucket: str = "tile", res: int | None = None,
-) -> DataFrame:
-    """Broadcast PiP with the geometry OUT of the join: the candidate
-    rows carry only a polygon index; ring/hole arrays reach the Python
-    refine workers once per worker via a Spark broadcast variable of
-    ragged numpy arrays.
+def _auto_grid(polys: DataFrame, ring: str, bucket: str) -> int:
+    """Grid size for ``pip_join`` from the layer's mean ring bbox (one
+    aggregate over the small polygon side): tile zoom ``z`` for
+    ``bucket="tile"``, cell ``res`` for "hex" and "s2". The size moves
+    only the candidate count, never the join result.
 
-    Rationale (measured): shipping each candidate's ring through Arrow
-    made the refine stage memory-bandwidth-bound — local[32] ran only
-    1.7x faster than local[8]. With rings broadcast, the per-candidate
-    Arrow payload drops ~10x and the refine scales with cores.
+    - tile: cell edge ~ the mean bbox extent, so each polygon covers
+      O(1) cells (~2-6) while a point's cell holds ~layer-density
+      polygons (at z=4 a 2-degree rect layer packs ~300 polygons per
+      22.5-degree cell and every point pays all of them in the probe);
+    - s2: ~4 cover cells per polygon (a level-L cell spans ~90/2^L
+      degrees near a face center). The superset bbox cover inflates
+      the fan-out past that target; on the sf1.0 rect layer level 6
+      ran 10.7 s against 15.5 s for a ~16-cell target;
+    - hex: ~16 cover cells per polygon (cell area 2.598 s^2). A finer
+      res multiplies every polygon row by its cover count: at res 3 a
+      4-degree footprint covers thousands of cells and the exploded
+      build side overflows a forced broadcast.
     """
-    import numpy as np
-    import pyarrow as pa
+    import math
 
-    from gfp_gdal_spark.kernels import cells as _c
-    from gfp_gdal_spark.kernels import geom as _g
+    from gfp_gdal_spark.kernels.cells import HEX_MAX_RES
 
-    spark = points.sparkSession
-    # guard the driver collect: a "broadcast" layer that isn't actually
-    # small must NOT silently OOM the driver — fail loud with the fix.
-    max_polys = 2_000_000
-    if polys.limit(max_polys + 1).count() > max_polys:
-        raise ValueError(
-            f"refine='arrow' broadcast path collects the polygon side to the "
-            f"driver; layer exceeds {max_polys} rows — use refine='jvm' "
-            f"(default) or broadcast=False"
-        )
-    pdf = polys.toPandas()  # broadcast-side: small by contract (guarded above)
-    n = len(pdf)
-    flat, offsets = _g.ragged_from_lists(pdf[ring].tolist())
-    hflat = hoff = hpoly = None
-    if holes is not None and holes in pdf.columns:
-        hole_rows, hole_rings = [], []
-        for i, h in enumerate(pdf[holes].tolist()):
-            if h is not None and len(h) > 0:
-                for r in h:
-                    hole_rows.append(i)
-                    hole_rings.append(r)
-        if hole_rows:
-            hflat, hoff = _g.ragged_from_lists(hole_rings)
-            hpoly = np.asarray(hole_rows, dtype=np.int64)
-    bc = spark.sparkContext.broadcast((flat, offsets, hflat, hoff, hpoly))
-
-    # driver-side covering cells (numpy; polygon side is small)
-    bb = _g.ring_bbox(flat, offsets)
-    if bucket == "hex":
-        cell, pidx = _c.hex_cover_bbox(bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3], res)
-    else:
-        x0, x1, y0, y1 = _c.tile_range_for_bbox(bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3], z)
-        counts = ((x1 - x0 + 1) * (y1 - y0 + 1)).astype(np.int64)
-        pidx = np.repeat(np.arange(n, dtype=np.int64), counts)
-        intra = np.arange(int(counts.sum()), dtype=np.int64) - np.repeat(
-            np.concatenate([[0], np.cumsum(counts)[:-1]]), counts
-        )
-        w = np.repeat(y1 - y0 + 1, counts)
-        xs = np.repeat(x0, counts) + intra // w
-        ys = np.repeat(y0, counts) + intra % w
-        cell = xs * np.int64(1 << (z + 1)) + ys
-
-    import pandas as pd
-
-    attrs = pdf.drop(columns=[c for c in (ring, holes) if c and c in pdf.columns])
-    attrs = attrs.assign(
-        _pidx=np.arange(n), _bx0=bb[:, 0], _by0=bb[:, 1], _bx1=bb[:, 2], _by1=bb[:, 3]
-    )
-    cells_pdf = pd.DataFrame({"cell": cell, "_pidx": pidx}).merge(attrs, on="_pidx")
-    cells_df = spark.createDataFrame(cells_pdf)
-
-    if bucket == "hex":
-        pts = points.withColumn("cell", hex_cell(F.col(lon), F.col(lat), res))
-    else:
-        xt, yt = tile_cols(F.col(lon), F.col(lat), z)
-        pts = points.withColumn("cell", xt * F.lit(1 << (z + 1)) + yt)
-    # bbox prefilter runs JVM-side (whole-stage codegen) BEFORE the
-    # Python boundary: candidates that can't be inside never pay the
-    # Arrow round-trip. Closed bounds — never drops a true inside point.
-    joined = pts.join(F.broadcast(cells_df), "cell").where(
-        (F.col(lon) >= F.col("_bx0")) & (F.col(lon) <= F.col("_bx1"))
-        & (F.col(lat) >= F.col("_by0")) & (F.col(lat) <= F.col("_by1"))
-    )
-    internal = {"cell", "_pidx", "_bx0", "_by0", "_bx1", "_by1"}
-    out_names = [c for c in joined.columns if c not in internal]
-
-    from pyspark.sql.types import StructType
-
-    fields = {f.name: f for f in joined.schema.fields}
-    out_schema = StructType([fields[c] for c in out_names])
-    lon_name, lat_name = lon, lat
-
-    def op(batches):
-        from gfp_gdal_spark.functions.worker_tuning import tune_worker
-
-        tune_worker()
-        bflat, boff, bhflat, bhoff, bhpoly = bc.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            px = batch.column(names.index(lon_name)).to_numpy(zero_copy_only=False)
-            py = batch.column(names.index(lat_name)).to_numpy(zero_copy_only=False)
-            pi = batch.column(names.index("_pidx")).to_numpy(zero_copy_only=False)
-            mask = _g.points_in_polygons_indexed(
-                px, py, pi, bflat, boff, bhflat, bhoff, bhpoly
-            )
-            pruned = pa.RecordBatch.from_arrays(
-                [batch.column(names.index(c)) for c in out_names], names=out_names
-            )
-            if mask.any():
-                yield pruned.filter(pa.array(mask))
-
-    return joined.mapInArrow(op, out_schema)
+    w = F.col("max_lon") - F.col("min_lon")
+    h = F.col("max_lat") - F.col("min_lat")
+    st = ring_bbox_cols(polys.select(ring), ring).agg(
+        F.avg(w).alias("w"), F.avg(h).alias("h"), F.avg(w * h).alias("a")
+    ).first()
+    if bucket == "tile":
+        ext = max(float(st.w or 0.0), float(st.h or 0.0), 1e-6)
+        return int(min(max(round(math.log2(360.0 / ext)), 0), 14))
+    a = max(st.a or 1e-6, 1e-6)
+    if bucket == "s2":
+        return int(min(max(round(math.log2(90.0 / math.sqrt(a / 4.0))), 0), 28))
+    s = math.sqrt(a / (2.598 * 16.0))
+    return int(min(max(round(-2.0 * math.log(s, 7.0)), 0), HEX_MAX_RES))
 
 
 def pip_join(
@@ -635,7 +558,6 @@ def pip_join(
     keep_geometry: bool = False,
     bucket: str = "tile",
     res: int | None = None,
-    refine: str = "jvm",
     salt: int | str | None = None,
     salt_top_k: int = 32,
 ) -> DataFrame:
@@ -644,21 +566,18 @@ def pip_join(
     points x polys -> rows where point (lon,lat) is strictly inside the
     polygon (exterior ring minus holes; ray-cast refine). Bucketing
     cell: ``bucket="tile"`` uses WebMercator tiles at zoom ``z`` (exact
-    rectangular cover, pure JVM math; ``z="auto"`` sizes the grid to
-    the layer's mean bbox extent — the hex/s2 auto-res twin, and the
-    right default: the bucket zoom changes only the candidate count,
-    never the result); ``bucket="hex"`` uses hexlite
-    cells at ``res`` (H3-style; superset bbox cover, also pure JVM).
-    Either way the refine is exact — the bucket scheme only shapes the
-    equi-join.
+    rectangular cover, pure JVM math); ``bucket="hex"`` uses hexlite
+    cells at ``res`` (H3-style; superset bbox cover, also pure JVM);
+    ``bucket="s2"`` uses S2-style cells at ``res``. ``z="auto"`` /
+    ``res="auto"`` (or None) size the grid to the layer's mean bbox
+    with one aggregate job (see ``_auto_grid``); a fixed size runs
+    none. The refine is exact whatever the grid — the bucket scheme
+    only shapes the equi-join.
 
-    refine="jvm" (default): the ray-cast refine is a pure Column
-    expression — the WHOLE join plan has zero Python nodes, so it
-    scales with cores like any JVM job (the Python-worker path was the
-    measured non-scaling component at local[8]→local[32]).
-    refine="arrow": the numpy/Arrow kernel paths (rings shipped via a
-    Spark broadcast variable when broadcast=True) — kept for very
-    vertex-heavy rings where one numpy pass per batch can win.
+    The refine is a pure Column expression (the ray cast, with a
+    bit-identical fast path for axis-aligned rectangles), so the whole
+    join plan has zero Python nodes and scales with cores like any JVM
+    job.
 
     broadcast=True  -> force broadcast of the (replicated) polygon side
     broadcast=False -> force shuffle (sort-merge / shuffle-hash) join
@@ -685,83 +604,22 @@ def pip_join(
             "against the inner result on the point key"
         )
     if bucket == "tile" and (z is None or z == "auto"):
-        # size the tile grid to the polygon extents (the tile twin of
-        # the hex/s2 auto sizing): cell edge ~ the layer's mean bbox
-        # extent, so each polygon covers O(1) cells (~2-6) while a
-        # point's cell holds ~layer-density polygons instead of the
-        # whole-cell pileup a too-coarse fixed z causes (at z=4 a
-        # 2-degree rect layer packs ~300 polygons per 22.5-degree cell
-        # and every point pays all of them in the equi-join probe).
-        # One cheap aggregate over the (small) polygon side.
-        import math
-
-        bb = ring_bbox_cols(polys.select(ring), ring)
-        st = bb.agg(
-            F.avg(F.col("max_lon") - F.col("min_lon")).alias("w"),
-            F.avg(F.col("max_lat") - F.col("min_lat")).alias("h"),
-        ).first()
-        ext = max(float(st.w or 0.0), float(st.h or 0.0), 1e-6)
-        z = int(min(max(round(math.log2(360.0 / ext)), 0), 14))
-    if bucket == "s2" and (res is None or res == "auto"):
-        # extent-based sizing: target ~4 cover cells per polygon (an S2
-        # cell at level L spans ~90/2^L degrees near a face center).
-        # Re-tuned from the original ~16-cell target: the superset bbox
-        # cover inflates the per-polygon fan-out well past the nominal
-        # target, and the measured sweep (sf1.0 rect layer: level-6
-        # 10.7s vs the old auto pick 15.5s) shows one-level-coarser
-        # cells trade a little refine work for a much smaller exploded
-        # build side.
-        import math
-
-        bb = ring_bbox_cols(polys.select(ring), ring)
-        st = bb.agg(
-            F.avg((F.col("max_lon") - F.col("min_lon")) * (F.col("max_lat") - F.col("min_lat"))).alias("a")
-        ).first()
-        s_deg = math.sqrt(max(st.a or 1e-6, 1e-6) / 4.0)
-        res = int(min(max(round(math.log2(90.0 / s_deg)), 0), 28))
-    if bucket == "hex" and (res is None or res == "auto"):
-        # size the bucket grid to the polygon extents: a too-fine res
-        # multiplies every polygon row (and its ring payload) by its
-        # cover-cell count — at res 3 a 4-degree footprint covers
-        # thousands of cells and the exploded build side OOMs a forced
-        # broadcast. Target ~16 cover cells per polygon (cell area =
-        # (3*sqrt(3)/2) s^2 = 2.598 s^2). One cheap aggregate over the
-        # (small) polygon side.
-        import math
-
-        from gfp_gdal_spark.kernels.cells import HEX_MAX_RES
-
-        bb = ring_bbox_cols(polys.select(ring), ring)
-        st = bb.agg(
-            F.avg((F.col("max_lon") - F.col("min_lon")) * (F.col("max_lat") - F.col("min_lat"))).alias("a")
-        ).first()
-        s = math.sqrt(max(st.a or 1e-6, 1e-6) / (2.598 * 16.0))
-        res = int(min(max(round(-2.0 * math.log(s, 7.0)), 0), HEX_MAX_RES))
+        z = _auto_grid(polys, ring, bucket)
+    elif bucket in ("hex", "s2") and (res is None or res == "auto"):
+        res = _auto_grid(polys, ring, bucket)
     hole_arg = holes if (holes is not None and holes in polys.columns) else None
 
-    if refine == "arrow":
-        from gfp_gdal_spark.functions.arrow_geom import pip_filter_arrow
-
-        if broadcast is True and not keep_geometry:
-            return _pip_join_broadcast_rings(
-                points, polys, z, lon, lat, ring, hole_arg, bucket=bucket, res=res
-            )
-
-    if refine == "jvm":
-        # rect fast path (bit-identical — see pip_refine_rect_col):
-        # detect axis-aligned rectangle rings ONCE per polygon, before
-        # the cover fan-out replicates them; candidates of non-rect
-        # layers pay a single null check instead of a per-candidate
-        # structural test (a per-candidate test measurably taxed the
-        # k-gon layers).
-        from gfp_gdal_spark.functions.spatial import rect_bounds_col
-
-        # helper column under a name neither side uses, so no caller
-        # column is overwritten or dropped
-        pr = "_pr"
-        while pr in polys.columns or pr in points.columns:
-            pr += "_"
-        polys = polys.withColumn(pr, rect_bounds_col(F.col(ring)))
+    # rect fast path (bit-identical — see pip_refine_rect_col): detect
+    # axis-aligned rectangle rings ONCE per polygon, before the cover
+    # fan-out replicates them; candidates of non-rect layers pay a
+    # single null check instead of a per-candidate structural test (a
+    # per-candidate test measurably taxed the k-gon layers). The helper
+    # column gets a name neither side uses, so no caller column is
+    # overwritten or dropped.
+    pr = "_pr"
+    while pr in polys.columns or pr in points.columns:
+        pr += "_"
+    polys = polys.withColumn(pr, rect_bounds_col(F.col(ring)))
     if bucket == "hex":
         pcells = cover_cells_hex(polys, res, ring, keep_bbox=True)
     elif bucket == "s2":
@@ -834,22 +692,13 @@ def pip_join(
     )
     joined = joined.drop("min_lon", "min_lat", "max_lon", "max_lat")
 
-    if refine == "jvm":
-        from gfp_gdal_spark.functions.spatial import pip_refine_rect_col
-
-        hole_c = F.col(hole_arg) if hole_arg else None
-        refined = joined.where(
-            pip_refine_rect_col(F.col(lon), F.col(lat), F.col(ring), F.col(pr), hole_c)
-        )
-        if keep_geometry:
-            return refined.drop("cell", pr)
-        return refined.drop("cell", pr, *([ring] + ([hole_arg] if hole_arg else [])))
-
+    hole_c = F.col(hole_arg) if hole_arg else None
+    refined = joined.where(
+        pip_refine_rect_col(F.col(lon), F.col(lat), F.col(ring), F.col(pr), hole_c)
+    )
     if keep_geometry:
-        return pip_filter_arrow(joined, lon, lat, ring, hole_arg).drop("cell")
-    drop = {"cell", ring} | ({hole_arg} if hole_arg else set())
-    out_cols = [c for c in joined.columns if c not in drop]
-    return pip_filter_arrow(joined, lon, lat, ring, hole_arg, out_cols=out_cols)
+        return refined.drop("cell", pr)
+    return refined.drop("cell", pr, ring, *([hole_arg] if hole_arg else []))
 
 
 # ---------------------------------------------------------------------------

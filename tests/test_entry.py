@@ -51,3 +51,17 @@ def test_enrich_geometry_matches_loader_semantics(spark):
     assert (out["area"] > 0).all()
     assert out["is_valid"].all()
     assert out["wkt"].str.startswith("POLYGON").all()
+
+
+def test_ring_is_ccw_huge_and_tiny_coordinates(spark):
+    """The orientation UDF reads the sign at any uniform scale: unscaled
+    shoelace cross terms overflow at 1e300 and underflow at 1e-300."""
+    from gfp_gdal_spark.functions import ring_is_ccw
+
+    rows = []
+    for scale in (1.0, 1e300, 1e-300):
+        ccw = [[x * scale, y * scale] for x, y in ((1, 1), (2, 1), (2, 2), (1, 2))]
+        rows += [(scale, True, ccw), (scale, False, ccw[:1] + ccw[:0:-1])]
+    df = spark.createDataFrame(rows, "scale double, want boolean, ring array<array<double>>")
+    got = df.select("scale", "want", ring_is_ccw(F.col("ring")).alias("got")).collect()
+    assert [(r.scale, r.got) for r in got] == [(r.scale, r.want) for r in got]

@@ -87,6 +87,52 @@ def test_pip_join_invariant_under_repartition(spark, points, brute_lonlat):
     assert pa == pb
 
 
+def _kgon_rings():
+    rings = []
+    for i in range(60):
+        k, rad = 3 + i % 6, 0.3 + (i % 5) * 0.2
+        cx, cy = (i * 37) % 340 - 170.0, (i * 13) % 160 - 80.0
+        ang = 0.1 + np.arange(k) * 2 * np.pi / k
+        rings.append([[float(cx + rad * np.cos(a)), float(cy + rad * np.sin(a))] for a in ang])
+    return rings
+
+
+def test_auto_grid_picks(spark):
+    """The (tile z, hex res, s2 res) pip_join picks for "auto": the zone
+    fixture, a k-gon layer, and the 1e-6 extent floor for zero-extent
+    rings and for an empty layer (NULL averages)."""
+    ring_t = "ring array<array<double>>"
+    layers = {
+        "zones": (datagen.vector_layer_zones(spark, 200), (8, 1, 6)),
+        "kgons": (spark.createDataFrame(pd.DataFrame({"ring": _kgon_rings()}), ring_t), (8, 2, 7)),
+        "zero_extent": (
+            spark.createDataFrame(pd.DataFrame({"ring": [[[float(i), 2.0 * i]] * 3 for i in range(5)]}), ring_t),
+            (14, 9, 17),
+        ),
+        "empty": (spark.createDataFrame([], ring_t), (14, 9, 17)),
+    }
+    for name, (layer, want) in layers.items():
+        got = tuple(J._auto_grid(layer, "ring", b) for b in ("tile", "hex", "s2"))
+        assert got == want, name
+
+
+def test_pip_join_fixed_grid_runs_no_job(spark, points):
+    """Only an "auto" grid pays the sizing aggregate; a fixed z or res
+    builds the plan without running a job."""
+    sc = spark.sparkContext
+    polys = datagen.vector_layer_zones(spark, 20)
+    jobs = {}
+    try:
+        for name, kw in (("z8", {"z": 8}), ("hex4", {"bucket": "hex", "res": 4}),
+                         ("auto", {"z": "auto"})):
+            sc.setJobGroup(f"pip_grid_{name}", name)
+            J.pip_join(points, polys, broadcast=True, **kw)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"pip_grid_{name}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs["z8"] == 0 and jobs["hex4"] == 0 and jobs["auto"] >= 1, jobs
+
+
 def test_knn_exact_matches_brute_force(spark, points, brute_lonlat):
     lon, lat = brute_lonlat
     qpdf = pd.DataFrame(

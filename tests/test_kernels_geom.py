@@ -37,6 +37,18 @@ def test_orient_idempotent():
     assert (G.signed_area(once, off) >= 0).all()
 
 
+@pytest.mark.parametrize("scale", [1.0, 1e300, 1e-300])
+def test_orient_huge_and_tiny_coordinates(scale):
+    """The orientation does not depend on a uniform scale: at 1e300 the
+    unscaled shoelace cross terms overflow to inf/NaN, at 1e-300 they
+    underflow to 0."""
+    ccw = (np.array([[1.0, 1.0], [2.0, 1.0], [2.0, 2.0], [1.0, 2.0]]) * scale).tolist()
+    cw = ccw[:1] + ccw[:0:-1]
+    flat, off = ragged([ccw, cw])
+    assert G.orient_rings(flat, off, ccw=True).tolist() == ccw + cw[::-1]
+    assert G.orient_rings(flat, off, ccw=False).tolist() == ccw[::-1] + cw
+
+
 def test_ragged_roundtrip():
     rings = [SQUARE, [], SQUARE_CW, None, [[1.0, 2.0]]]
     flat, off = ragged(rings)
@@ -63,6 +75,42 @@ def test_pip_holes():
         np.array([5.0, 2.0]), np.array([5.0, 2.0]), flat, off, [[hole], [hole]]
     )
     assert got.tolist() == [False, True]  # center is inside the hole
+
+
+def _fuzz_ring(rng):
+    """0..8 vertices around a random centre; about half snapped to a
+    0.5 grid, so rings share vertices and edges with each other and
+    with the snapped probes."""
+    k = int(rng.integers(0, 9))
+    c = rng.uniform(-3, 3, 2)
+    ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+    pts = c + rng.uniform(0.3, 2.5, (k, 1)) * np.stack([np.cos(ang), np.sin(ang)], axis=1)
+    snap = rng.random(k) < 0.5
+    pts[snap] = np.round(pts[snap] * 2) / 2
+    return pts.tolist()
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_points_in_polygons_indexed_matches_pairwise(seed):
+    """The shared-table ray cast equals the per-row one bit for bit on
+    random 0..8-gons with 0..2 holes each."""
+    rng = np.random.default_rng(seed)
+    n_poly, n = int(rng.integers(1, 12)), 400
+    ext = [_fuzz_ring(rng) for _ in range(n_poly)]
+    holes = [[_fuzz_ring(rng) for _ in range(int(rng.integers(0, 3)))] for _ in range(n_poly)]
+    pidx = rng.integers(0, n_poly, n)
+    xy = rng.uniform(-5, 5, (n, 2))
+    snap = rng.random(n) < 0.5
+    xy[snap] = np.round(xy[snap] * 2) / 2
+    px, py = xy[:, 0], xy[:, 1]
+    flat, off = ragged(ext)
+    hole_rings = [r for h in holes for r in h]
+    hpoly = np.array([i for i, h in enumerate(holes) for _ in h], dtype=np.int64)
+    hflat, hoff = ragged(hole_rings)
+    got = G.points_in_polygons_indexed(px, py, pidx, flat, off, hflat, hoff, hpoly)
+    eflat, eoff = ragged([ext[i] for i in pidx])
+    want = G.point_in_polygon_pairwise(px, py, eflat, eoff, [holes[i] for i in pidx])
+    assert got.any() and np.array_equal(got, want)
 
 
 def test_validity():

@@ -90,17 +90,12 @@ def test_pip_join_default_is_pure_jvm(spark, images_path):
     pts = with_footprint(spark.read.parquet(images_path)).select("image_id", "lon_c", "lat_c")
     polys = datagen.vector_layer_zones(spark, 200)
     for kwargs in ({"z": 6, "broadcast": True}, {"z": 6, "broadcast": False},
-                   {"bucket": "hex", "res": 4, "broadcast": True}):
+                   {"bucket": "hex", "res": 4, "broadcast": True},
+                   {"z": "auto", "broadcast": True},
+                   {"z": "auto", "broadcast": False, "salt": "auto"}):
         plan = plan_of(J.pip_join(pts, polys, **kwargs))
         for marker in PY_MARKERS:
             assert marker not in plan, f"pip_join({kwargs}) leaked into Python: {marker}"
-
-
-def test_pip_join_arrow_refine_still_available(spark, images_path):
-    pts = with_footprint(spark.read.parquet(images_path)).select("image_id", "lon_c", "lat_c")
-    polys = datagen.vector_layer_zones(spark, 200)
-    plan = plan_of(J.pip_join(pts, polys, z=6, broadcast=True, refine="arrow"))
-    assert "_bx0" in plan and "_bx1" in plan  # prefilter ahead of the Arrow boundary
 
 
 def test_rasterize_zones_scanline_plan(spark):

@@ -12,7 +12,7 @@ from tests.conftest import spark  # noqa: F401  (fixture re-export)
 
 
 def _refine_rows(spark, rows):
-    """Evaluate BOTH the full pip_refine_col (with the rect fast path)
+    """Evaluate BOTH the full pip_refine_rect_col (with the rect fast path)
     and the raw general ray cast on (px, py, ring) rows."""
     from gfp_gdal_spark.functions.spatial import (
         pip_refine_rect_col,
@@ -43,7 +43,7 @@ def _refine_rows(spark, rows):
 
 
 def test_rect_fast_path_bit_identical_to_ray_cast(spark):  # noqa: F811
-    """The axis-aligned-rect special case in pip_refine_col must agree
+    """The axis-aligned-rect special case in pip_refine_rect_col must agree
     with the general ray cast on EVERY input — random rects, points on
     every edge/corner (the half-open boundary), degenerate rects, CW
     winding, and non-rectangular rings (which must take the slow path
