@@ -30,6 +30,7 @@ __all__ = [
     "s2_encode_ij",
     "s2_face_uv",
     "s2_cover_bbox",
+    "hex_res_for_size",
     "HEX_BASE_SIZE_DEG",
     "MAX_LAT_WEBMERC",
 ]
@@ -93,6 +94,12 @@ _SQ3 = math.sqrt(3.0)
 
 def _hex_size(res: int) -> float:
     return HEX_BASE_SIZE_DEG * (7.0 ** (-res / 2.0))
+
+
+def hex_res_for_size(s: float) -> int:
+    """The res whose cell size is nearest ``s`` on the log-7 scale (the
+    inverse of ``_hex_size``), clamped to [0, HEX_MAX_RES]; ``s > 0``."""
+    return int(min(max(round(-2.0 * math.log(s / HEX_BASE_SIZE_DEG, 7.0)), 0), HEX_MAX_RES))
 
 
 def _cube_round(qf: np.ndarray, rf: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -334,87 +341,15 @@ def s2_encode(lon, lat, level: int) -> np.ndarray:
 _S2_EQ_FACES = {0: 0.0, 1: 90.0, 3: 180.0, 4: -90.0}
 
 
-def _s2_face_uv_range(face: int, lon0, lon1, lat0, lat1):
-    """Over-approximate [umin,umax]x[vmin,vmax] of a lon/lat bbox's
-    image on ``face`` (None if no bbox point can map to this face).
-    Exact-or-superset via monotonicity/critical-point analysis of the
-    cube projection; clamped to the face square [-1,1]."""
-    d2r = math.radians
-    if face in _S2_EQ_FACES:
-        lam_f = _S2_EQ_FACES[face]
-        # re-center longitudes to (-180, 180] around the face center
-        a = (lon0 - lam_f + 180.0) % 360.0 - 180.0
-        b = a + (lon1 - lon0)
-        # the face only sees |dlam| < 90 (beyond that another axis
-        # dominates); clamp the window, reject disjoint ranges
-        if b < -89.99 or a > 89.99:
-            return None
-        ca, cb = max(a, -89.99), min(b, 89.99)
-        # the two coordinate families on an equatorial face:
-        #   t = tan(dlam)                  (monotone in dlam)
-        #   w = tan(lat)/cos(dlam)         (monotone in lat; 1/cos has
-        #                                   its max at the window ends,
-        #                                   min at dlam=0 when inside)
-        t_lo, t_hi = math.tan(d2r(ca)), math.tan(d2r(cb))
-        cos_cands = [math.cos(d2r(ca)), math.cos(d2r(cb))]
-        if ca <= 0.0 <= cb:
-            cos_cands.append(1.0)
-        ws = [math.tan(d2r(p)) / c for p in (lat0, lat1) for c in cos_cands]
-        w_lo, w_hi = min(ws), max(ws)
-        # per-face (u, v) in terms of (t, w) — derived from the cube
-        # component table in s2_face_uv:
-        #   face 0 (x+): u =  t, v =  w      face 1 (y+): u = w, v = -t
-        #   face 3 (x-): u = -t, v =  w      face 4 (y-): u = w, v =  t
-        if face == 0:
-            umin, umax, vmin, vmax = t_lo, t_hi, w_lo, w_hi
-        elif face == 3:
-            umin, umax, vmin, vmax = -t_hi, -t_lo, w_lo, w_hi
-        elif face == 1:
-            umin, umax, vmin, vmax = w_lo, w_hi, -t_hi, -t_lo
-        else:  # face 4
-            umin, umax, vmin, vmax = w_lo, w_hi, t_lo, t_hi
-    elif face == 2:
-        if lat1 <= 0.0:
-            return None
-        p0 = max(lat0, 0.01)
-        # u = cos(lam)/tan(lat), v = sin(lam)/tan(lat): separable
-        # products — extremes at factor-extreme combinations
-        cot = [1.0 / math.tan(d2r(p0)), 1.0 / math.tan(d2r(max(lat1, p0)))]
-        coss = [math.cos(d2r(lon0)), math.cos(d2r(lon1))]
-        sins = [math.sin(d2r(lon0)), math.sin(d2r(lon1))]
-        for crit, arr in ((0.0, coss), (180.0, coss), (-180.0, coss),
-                          (90.0, sins), (-90.0, sins)):
-            if lon0 <= crit <= lon1:
-                arr.append(math.cos(d2r(crit)) if arr is coss else math.sin(d2r(crit)))
-        us = [c * t for c in coss for t in cot]
-        vs = [sn * t for sn in sins for t in cot]
-        umin, umax, vmin, vmax = min(us), max(us), min(vs), max(vs)
-    else:  # face 5 (south): u = -cos(lam)/tan(lat), v = -sin(lam)/tan(lat)
-        if lat0 >= 0.0:
-            return None
-        p1 = min(lat1, -0.01)
-        cot = [-1.0 / math.tan(d2r(p1)), -1.0 / math.tan(d2r(min(lat0, p1)))]
-        coss = [math.cos(d2r(lon0)), math.cos(d2r(lon1))]
-        sins = [math.sin(d2r(lon0)), math.sin(d2r(lon1))]
-        for crit, arr in ((0.0, coss), (180.0, coss), (-180.0, coss),
-                          (90.0, sins), (-90.0, sins)):
-            if lon0 <= crit <= lon1:
-                arr.append(math.cos(d2r(crit)) if arr is coss else math.sin(d2r(crit)))
-        us = [c * t for c in coss for t in cot]
-        vs = [sn * t for sn in sins for t in cot]
-        umin, umax, vmin, vmax = min(us), max(us), min(vs), max(vs)
-    if umax < -1.0 or umin > 1.0 or vmax < -1.0 or vmin > 1.0:
-        return None
-    return (
-        max(umin, -1.0), min(umax, 1.0), max(vmin, -1.0), min(vmax, 1.0)
-    )
-
-
 def _s2_face_uv_range_vec(face: int, lon0, lon1, lat0, lat1):
-    """Vectorized _s2_face_uv_range over row arrays. Returns
-    (valid_mask, umin, umax, vmin, vmax) with invalid rows masked."""
-    n = len(lon0)
+    """Over-approximate [umin,umax]x[vmin,vmax] of each row's lon/lat
+    bbox image on ``face``, clamped to the face square [-1,1]: exact or
+    a superset via monotonicity/critical-point analysis of the cube
+    projection. Returns (valid_mask, umin, umax, vmin, vmax); a row is
+    invalid when no point of its bbox can map to this face."""
     if face in _S2_EQ_FACES:
+        # re-center longitudes around the face center; the face only
+        # sees |dlam| < 90, so clamp the window and reject disjoint rows
         lam_f = _S2_EQ_FACES[face]
         a = (lon0 - lam_f + 180.0) % 360.0 - 180.0
         b = a + (lon1 - lon0)
@@ -431,6 +366,11 @@ def _s2_face_uv_range_vec(face: int, lon0, lon1, lat0, lat1):
         ws = tans[:, None, :] / cos_c[None, :, :]  # (2, 3, n)
         w_lo = ws.min(axis=(0, 1))
         w_hi = ws.max(axis=(0, 1))
+        # t = tan(dlam) is monotone in dlam; w = tan(lat)/cos(dlam) is
+        # monotone in lat, with 1/cos largest at the window ends and
+        # smallest at dlam=0 when inside. Per face (cube table of
+        # s2_face_uv): face 0 u=t, v=w; face 3 u=-t, v=w; face 1 u=w,
+        # v=-t; face 4 u=w, v=t.
         if face == 0:
             umin, umax, vmin, vmax = t_lo, t_hi, w_lo, w_hi
         elif face == 3:
@@ -440,6 +380,8 @@ def _s2_face_uv_range_vec(face: int, lon0, lon1, lat0, lat1):
         else:  # face 4
             umin, umax, vmin, vmax = w_lo, w_hi, t_lo, t_hi
     else:
+        # polar faces: u = ±cos(lam)/tan(lat), v = ±sin(lam)/tan(lat) are
+        # separable products, extreme at factor-extreme combinations
         if face == 2:
             valid = lat1 > 0.0
             p0 = np.maximum(lat0, 0.01)

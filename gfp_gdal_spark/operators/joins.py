@@ -528,7 +528,7 @@ def _auto_grid(polys: DataFrame, ring: str, bucket: str) -> int:
     """
     import math
 
-    from gfp_gdal_spark.kernels.cells import HEX_MAX_RES
+    from gfp_gdal_spark.kernels.cells import hex_res_for_size
 
     w = F.col("max_lon") - F.col("min_lon")
     h = F.col("max_lat") - F.col("min_lat")
@@ -541,8 +541,7 @@ def _auto_grid(polys: DataFrame, ring: str, bucket: str) -> int:
     a = max(st.a or 1e-6, 1e-6)
     if bucket == "s2":
         return int(min(max(round(math.log2(90.0 / math.sqrt(a / 4.0))), 0), 28))
-    s = math.sqrt(a / (2.598 * 16.0))
-    return int(min(max(round(-2.0 * math.log(s, 7.0)), 0), HEX_MAX_RES))
+    return hex_res_for_size(math.sqrt(a / (2.598 * 16.0)))
 
 
 def pip_join(
@@ -737,7 +736,6 @@ def knn_join(
     p_lat: str = "lat_c",
     exact: bool = True,
     max_rounds: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT kNN join via hex k-ring expansion with escalation.
 
@@ -764,7 +762,7 @@ def knn_join(
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
-    from gfp_gdal_spark.kernels.cells import HEX_BASE_SIZE_DEG, HEX_MAX_RES
+    from gfp_gdal_spark.kernels.cells import HEX_BASE_SIZE_DEG, _hex_size, hex_res_for_size
 
     if res == "auto":
         # pick the hex res so the round-1 k-ring disk holds ~2k points
@@ -817,9 +815,9 @@ def knn_join(
             return knn_join_bruteforce(
                 queries, points, k, q_id, q_lon, q_lat, p_id, p_lon, p_lat
             )
-        res = int(min(max(round(-2.0 * math.log(s / HEX_BASE_SIZE_DEG, 7.0)), 0), HEX_MAX_RES))
+        res = hex_res_for_size(s)
 
-    size = HEX_BASE_SIZE_DEG * (7.0 ** (-res / 2.0))
+    size = _hex_size(res)
     # narrow scans (one parquet split) would hex-encode + shuffle the
     # whole point side in ONE task every round — fan out first
     pc = _fan_out(points).withColumn("cell", hex_cell(F.col(p_lon), F.col(p_lat), res))
@@ -907,14 +905,12 @@ def knn_join(
     out = done_parts[0]
     for part in done_parts[1:]:
         out = out.unionByName(part)
-    if materialize:
-        # cut the lineage (eager localCheckpoint) then release every
-        # per-round cache — a long-lived session must not accumulate
-        # round state. materialize=False returns the lazy union and
-        # leaves the caches to the caller (who must unpersist).
-        out = out.localCheckpoint(eager=True)
-        for p in persisted:
-            p.unpersist()
+    # cut the lineage (eager localCheckpoint) then release every
+    # per-round cache — a long-lived session must not accumulate round
+    # state.
+    out = out.localCheckpoint(eager=True)
+    for p in persisted:
+        p.unpersist()
     return out
 
 
@@ -947,7 +943,7 @@ def radius_join(
     """
     import math
 
-    from gfp_gdal_spark.kernels.cells import HEX_BASE_SIZE_DEG, HEX_MAX_RES
+    from gfp_gdal_spark.kernels.cells import _hex_size, hex_res_for_size
 
     st_r = right.agg(F.max(F.abs(F.col(r_lat))).alias("mx")).first()
     st_l = left.agg(F.max(F.abs(F.col(l_lat))).alias("mx")).first()
@@ -975,11 +971,11 @@ def radius_join(
         # size cells to the MID-latitude lon extent; polar rows just
         # cover more cells of the same grid (per-row adaptive anyway)
         typ = dlat_deg / max(math.cos(math.radians(min(max_lat, 60.0))), 0.2)
-        res = int(min(max(round(-2.0 * math.log(max(typ, 1e-12) / HEX_BASE_SIZE_DEG, 7.0)), 0), HEX_MAX_RES))
+        res = hex_res_for_size(max(typ, 1e-12))
     max_dlon = math.degrees(
         math.asin(min(sin_r / math.cos(math.radians(max_lat)), 1.0))
     ) * 1.0001
-    wrap = float(max_dlon + 4.0 * HEX_BASE_SIZE_DEG * (7.0 ** (-res / 2.0)))
+    wrap = float(max_dlon + 4.0 * _hex_size(res))
     hi = right.where(F.col(r_lon) > 180.0 - wrap).withColumn(r_lon, F.col(r_lon) - 360.0)
     lo = right.where(F.col(r_lon) < -180.0 + wrap).withColumn(r_lon, F.col(r_lon) + 360.0)
     r_all = right.unionByName(hi).unionByName(lo)

@@ -108,7 +108,6 @@ def run_north_star_resumable(
     manifest_path: str,
     n_buckets: int = 16,
     buckets_per_job: int = 4,
-    fail_after: int | None = None,
     **pipeline_kw,
 ) -> dict:
     """Bucketed, resumable execution of the pipeline with per-bucket
@@ -124,5 +123,4 @@ def run_north_star_resumable(
         id_col="image_id",
         n_buckets=n_buckets,
         buckets_per_job=buckets_per_job,
-        fail_after=fail_after,
     )

@@ -1,26 +1,31 @@
-"""Checkpoint lineage: resumable bucketed runs + per-partition metrics
-[north_rule: "resumable from checkpoint with per-partition lineage +
-metrics"].
+"""Checkpoint lineage: the engine's one resumable runner and its
+per-bucket metrics [north_rule: "resumable from checkpoint with
+per-partition lineage + metrics"].
 
-Design: work is partitioned into deterministic BUCKETS (e.g. coarse
-spatial cells, or pmod(hash(id), n)). A manifest table records one row
-per finished bucket with its metrics. A resumed run anti-joins the
-bucket list against the manifest and recomputes ONLY missing buckets;
-bucket outputs go to ``out/bucket=<id>/`` via dynamic partition
-overwrite, so a re-run of a half-finished bucket is idempotent.
+Work is split into deterministic BUCKETS (``pmod(xxhash64(id), n)``).
+``run_bucketed`` writes the buckets group by group to
+``out/bucket=<id>/`` with dynamic partition overwrite, then appends one
+manifest row per bucket of the group. The manifest append is the commit
+point: a bucket without a manifest row is redone on resume, and redoing
+it overwrites only its own partition, so a crash anywhere in a group
+leaves a state that a second call completes.
+
+A manifest row's metrics come from the write itself, with no second
+Spark job: ``rows`` from an ``observe`` on the written frame, ``bytes``
+and ``n_files`` from a listing of the bucket directory through the
+Hadoop FileSystem of the output path's scheme (local, ``file://``,
+HDFS, S3).
 
 This is the engine's analog of OGRWriter's transactional batch commits
 (ogr_writer_node.cpp:524-531) lifted to cluster granularity: the
-"transaction" is a bucket, the commit is the manifest row.
+"transaction" is a bucket group, the commit is its manifest rows.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -71,11 +76,40 @@ def bucket_column(id_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("long")
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Hadoop Path) for ``path``; the FileSystem is
+    the one of the path's own scheme (the default FS when it has none)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _data_files(fs, jdir) -> tuple[int, int]:
+    """(bytes, n_files) of the data files directly under ``jdir``. Names
+    starting with ``_`` or ``.`` are not data (Spark's hidden-file rule:
+    ``_SUCCESS``, checksum files)."""
+    if not fs.exists(jdir):
+        return 0, 0
+    sizes = [
+        st.getLen()
+        for st in fs.listStatus(jdir)
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    ]
+    return int(sum(sizes)), len(sizes)
+
+
+def _append_manifest(spark: SparkSession, rows: list[tuple], manifest_path: str) -> None:
+    """Commit a bucket group: append its manifest rows. Runs only after
+    the group's data write has finished."""
+    spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(manifest_path)
+
+
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
-    except Exception:
+    """The manifest rows committed so far (none when the path does not
+    exist yet). Any other failure to read it propagates."""
+    fs, jpath = _fs_path(spark, manifest_path)
+    if not fs.exists(jpath):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
 def pending_buckets(spark: SparkSession, manifest_path: str, n_buckets: int) -> list[int]:
@@ -91,24 +125,27 @@ def run_bucketed(
     id_col: str,
     n_buckets: int = 16,
     buckets_per_job: int = 4,
-    fail_after: int | None = None,
 ) -> dict:
-    """Process ``df`` bucket-group by bucket-group, committing a
-    manifest row per finished group. Resume = call again: finished
+    """Process ``df`` bucket-group by bucket-group, committing one
+    manifest row per finished bucket. Resume = call again: finished
     buckets are skipped via the manifest (the anti-join is a driver-side
-    set difference — the manifest is tiny by construction).
-
-    ``fail_after`` kills the run after N bucket groups (test hook for
-    the kill/resume invariant). Returns run metrics.
+    set difference — the manifest is tiny by construction). One Spark
+    job per group writes the data; no job reads ``out_path``.
+    Returns run metrics.
     """
     pend = pending_buckets(spark, manifest_path, n_buckets)
     work = df.withColumn("bucket", bucket_column(id_col, n_buckets))
-    n_done = 0
+    fs, out_root = _fs_path(spark, out_path)
     t_run = time.time()
     for i in range(0, len(pend), buckets_per_job):
         group = pend[i : i + buckets_per_job]
         t0 = time.time()
-        part = work.where(F.col("bucket").isin(group))
+        # per-bucket row counts ride on the write (accumulator-backed,
+        # no extra job); a bucket with no rows counts 0
+        obs = Observation()
+        part = work.where(F.col("bucket").isin(group)).observe(
+            obs, *[F.count_if(F.col("bucket") == b).alias(str(b)) for b in group]
+        )
         # dynamic partition overwrite set ON THE WRITER: with Spark's
         # session default (static), this overwrite would delete EVERY
         # previously committed bucket partition while the manifest still
@@ -121,41 +158,16 @@ def run_bucketed(
             .parquet(out_path)
         )
         wall = time.time() - t0
-        # per-bucket metrics from the files just written
-        stats = (
-            spark.read.parquet(out_path)
-            .where(F.col("bucket").isin(group))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        sizes = {}
+        rows = obs.get
+        ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        manifest_rows = []
         for b in group:
-            bdir = os.path.join(out_path, f"bucket={b}")
-            fs = [
-                os.path.join(bdir, f)
-                for f in (os.listdir(bdir) if os.path.isdir(bdir) else [])
-                if f.endswith(".parquet")
-            ]
-            sizes[b] = (sum(os.path.getsize(f) for f in fs), len(fs))
-        rows_map = {r.bucket: r.rows for r in stats}
-        manifest_rows = [
-            (
-                int(b),
-                int(rows_map.get(b, 0)),
-                int(sizes.get(b, (0, 0))[0]),
-                int(sizes.get(b, (0, 0))[1]),
-                float(wall / len(group)),
-                time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            jdir = spark._jvm.org.apache.hadoop.fs.Path(out_root, f"bucket={b}")
+            nbytes, n_files = _data_files(fs, jdir)
+            manifest_rows.append(
+                (int(b), int(rows[str(b)]), nbytes, n_files, float(wall / len(group)), ts)
             )
-            for b in group
-        ]
-        spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode("append").parquet(
-            manifest_path
-        )
-        n_done += 1
-        if fail_after is not None and n_done >= fail_after:
-            raise RuntimeError(f"simulated failure after {n_done} bucket groups")
+        _append_manifest(spark, manifest_rows, manifest_path)
     return {
         "buckets_processed": len(pend),
         "wall_sec": time.time() - t_run,

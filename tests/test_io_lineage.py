@@ -60,15 +60,16 @@ def test_segments_csv_grouping(spark, tmp_path):
     assert out == {"b0": 10, "b1": 10, "b2": 10}
 
 
-def test_lineage_kill_resume(spark, tmp_path):
+def test_lineage_kill_resume(spark, tmp_path, kill_at_commit):
     """north_rule: a killed job resumes without recomputing finished
     buckets, and the final output equals an uninterrupted run."""
     df = spark.range(0, 2000).withColumn("v", F.col("id") * 2)
     out = str(tmp_path / "out")
     man = str(tmp_path / "manifest")
 
+    kill_at_commit(2)
     with pytest.raises(RuntimeError, match="simulated failure"):
-        L.run_bucketed(spark, df, out, man, "id", n_buckets=8, buckets_per_job=2, fail_after=2)
+        L.run_bucketed(spark, df, out, man, "id", n_buckets=8, buckets_per_job=2)
 
     done_before = set(r.bucket for r in L.read_manifest(spark, man).collect())
     assert len(done_before) == 4  # 2 groups x 2 buckets committed
@@ -86,3 +87,78 @@ def test_lineage_kill_resume(spark, tmp_path):
     # idempotent: running again does nothing
     res2 = L.run_bucketed(spark, df, out, man, "id", n_buckets=8)
     assert res2["buckets_processed"] == 0
+
+
+def test_lineage_crash_between_write_and_commit(spark, tmp_path, kill_at_commit):
+    """A crash after a group's data write but before its manifest append
+    leaves that group's partitions on disk uncommitted; resume redoes
+    exactly the uncommitted buckets and the output equals an
+    uninterrupted run, with one manifest row per bucket."""
+    df = spark.range(0, 2000).withColumn("v", F.col("id") * 2)
+    out, man = str(tmp_path / "out"), str(tmp_path / "manifest")
+    ref, ref_man = str(tmp_path / "ref"), str(tmp_path / "ref_manifest")
+    L.run_bucketed(spark, df, ref, ref_man, "id", n_buckets=8, buckets_per_job=2)
+
+    kill_at_commit(3, before=True)
+    with pytest.raises(RuntimeError, match="simulated failure before commit 3"):
+        L.run_bucketed(spark, df, out, man, "id", n_buckets=8, buckets_per_job=2)
+    assert L.read_manifest(spark, man).count() == 4
+    # the killed group's data is already written
+    assert spark.read.parquet(out).select("bucket").distinct().count() == 6
+
+    res = L.run_bucketed(spark, df, out, man, "id", n_buckets=8, buckets_per_job=2)
+    assert res["buckets_processed"] == 4
+    got, want = spark.read.parquet(out), spark.read.parquet(ref)
+    assert got.count() == want.count() == 2000
+    assert sorted(map(tuple, got.select("id", "v", "bucket").collect())) == sorted(
+        map(tuple, want.select("id", "v", "bucket").collect())
+    )
+    m = L.read_manifest(spark, man).toPandas()
+    assert sorted(m["bucket"]) == list(range(8))
+    ref_m = L.read_manifest(spark, ref_man).toPandas().set_index("bucket")
+    assert m.set_index("bucket")["rows"].sort_index().tolist() == ref_m["rows"].sort_index().tolist()
+
+
+def test_lineage_manifest_file_uri(spark, tmp_path):
+    """Manifest metrics on ``file://`` URIs: rows equal a re-read of each
+    bucket, bytes/n_files equal the data files on disk; a bucket that
+    receives no rows records 0/0/0."""
+    df = spark.range(0, 3000, 1, 6).withColumn("v", F.col("id") * 3)
+    out_dir = tmp_path / "out"
+    out, man = out_dir.as_uri(), (tmp_path / "manifest").as_uri()
+    assert out.startswith("file://")
+    L.run_bucketed(spark, df, out, man, "id", n_buckets=8, buckets_per_job=3)
+    m = L.read_manifest(spark, man).toPandas().set_index("bucket")
+    assert sorted(m.index) == list(range(8))
+    reread = {
+        r["bucket"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("bucket").count().collect()
+    }
+    for b in range(8):
+        files = [
+            os.path.join(d, f)
+            for d, _, names in os.walk(out_dir / f"bucket={b}")
+            for f in names
+            if not f.startswith((".", "_"))
+        ]
+        assert m.loc[b, "rows"] == reread[b]
+        assert m.loc[b, "n_files"] == len(files) > 0
+        assert m.loc[b, "bytes"] == sum(os.path.getsize(f) for f in files)
+
+    sparse_out = (tmp_path / "sparse").as_uri()
+    sparse_man = (tmp_path / "sparse_manifest").as_uri()
+    L.run_bucketed(spark, spark.range(0, 2), sparse_out, sparse_man, "id", n_buckets=8)
+    sm = L.read_manifest(spark, sparse_man).toPandas().set_index("bucket")
+    assert sorted(sm.index) == list(range(8)) and sm["rows"].sum() == 2
+    empty = sm[sm["rows"] == 0]
+    assert len(empty) >= 6 and (empty["bytes"] == 0).all() and (empty["n_files"] == 0).all()
+
+
+def test_read_manifest_missing_vs_unreadable(spark, tmp_path):
+    """A manifest that does not exist yet means no bucket is done; a
+    manifest path that cannot be opened is an error, not an empty
+    manifest (which would silently redo every bucket)."""
+    assert L.read_manifest(spark, str(tmp_path / "none")).count() == 0
+    assert L.pending_buckets(spark, str(tmp_path / "none"), 4) == [0, 1, 2, 3]
+    with pytest.raises(Exception, match="No FileSystem for scheme"):
+        L.read_manifest(spark, "nosuchscheme://host/manifest")

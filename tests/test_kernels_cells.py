@@ -54,6 +54,16 @@ def test_hex_center_distance_bounded(pts):
     assert (d <= size * 1.0001).all()
 
 
+def test_hex_res_for_size_inverts_hex_size():
+    for r in range(C.HEX_MAX_RES + 1):
+        assert C.hex_res_for_size(C._hex_size(r)) == r
+    # clamps: coarser than res 0 -> 0, finer than the max res -> max
+    assert C.hex_res_for_size(C._hex_size(0) * 50.0) == 0
+    assert C.hex_res_for_size(1e9) == 0
+    assert C.hex_res_for_size(C._hex_size(C.HEX_MAX_RES) / 50.0) == C.HEX_MAX_RES
+    assert C.hex_res_for_size(1e-12) == C.HEX_MAX_RES
+
+
 def test_hex_disk_counts():
     for k in range(4):
         assert len(C.hex_disk_offsets(k)) == 3 * k * (k + 1) + 1

@@ -53,13 +53,14 @@ def test_pipeline_end_to_end(spark, images_path, layer):
     assert {"tile_x", "tile_y", "hex_cell", "s2_cell"} <= set(pdf.columns)
 
 
-def test_pipeline_kill_resume(spark, images_path, layer, tmp_path):
+def test_pipeline_kill_resume(spark, images_path, layer, tmp_path, kill_at_commit):
     out = str(tmp_path / "out")
     man = str(tmp_path / "man")
+    kill_at_commit(2)
     with pytest.raises(RuntimeError, match="simulated failure"):
         P.run_north_star_resumable(
             spark, images_path, layer, out, man,
-            n_buckets=8, buckets_per_job=2, fail_after=2, pip_z=6,
+            n_buckets=8, buckets_per_job=2, pip_z=6,
         )
     res = P.run_north_star_resumable(
         spark, images_path, layer, out, man, n_buckets=8, buckets_per_job=2, pip_z=6

@@ -1,4 +1,4 @@
-"""Raster operators + per-partition metrics tests."""
+"""Raster operator tests."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from gfp_gdal_spark.functions.spatial import with_footprint
 from gfp_gdal_spark.kernels import codec as C
 from gfp_gdal_spark.operators import raster as R
-from gfp_gdal_spark.plans.metrics import partition_metrics
 from gfp_gdal_spark.sources import datagen
 
 
@@ -71,15 +70,6 @@ def test_flatten_multipolygon(spark):
     assert len(out) == 3
     assert out[out.fid == 1]["part_seq"].tolist() == [0, 1]
     assert (out[out.fid == 1]["tag"] == "a").all()  # attrs replicated
-
-
-def test_partition_metrics(spark):
-    df = spark.range(0, 10000, 1, 8).withColumn("cell", F.pmod("id", F.lit(50)))
-    m = partition_metrics(df, cell_col="cell").toPandas()
-    assert len(m) == 8
-    assert m["rows"].sum() == 10000
-    assert (m["bytes"] > 0).all()
-    assert (m["n_cells"] <= 50).all() and m["n_cells"].max() == 50
 
 
 def test_stack_bands_multiband_roundtrip(spark):
