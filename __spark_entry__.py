@@ -475,13 +475,7 @@ def _q_embedding_dedup(spark, sf):
         F.transform("embedding", lambda x: x * 1.25).alias("embedding"),
     )
     aug = emb.unionByName(copies)
-    # bits=12 (was 8): the first 8 hyperplanes of the seeded generator
-    # are byte-identical (C-order fill), so 12-bit bucket agreement
-    # implies 8-bit agreement — the candidate set only SHRINKS (~16x
-    # fewer false candidates) while the planted copies (hamming 0 under
-    # any planes: positive scaling preserves every sign) always
-    # survive; the emitted clusters are identical (oracle-checked).
-    out = SIM.embedding_dedup(aug, threshold=0.9, dim=64, bits=12, multiprobe=1)
+    out = SIM.embedding_dedup(aug, threshold=0.9, dim=64, bits=8, multiprobe=1)
     return out.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_members"))
 
 

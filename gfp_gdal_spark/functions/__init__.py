@@ -5,8 +5,9 @@ Two tiers, chosen deliberately per function:
 1. **Pure Column expressions** (JVM-side, whole-stage-codegen'd) for
    everything expressible in Spark SQL math — WebMercator tiling,
    footprint derivation, text stats. These never leave the JVM.
-2. **Vectorized pandas UDFs** (Arrow batch transfer) wrapping the
-   numpy kernels for ragged-geometry ops, cell indexes, image codecs —
+2. **Vectorized Arrow/pandas UDFs** (Arrow batch transfer) wrapping
+   the numpy kernels — ragged-geometry ops as ``arrow_udf``s on the
+   ``kernels.geom`` Arrow ring boundary; cell indexes, image codecs —
    the "no per-row Python" contract of BASELINE.json input_hint.
 """
 

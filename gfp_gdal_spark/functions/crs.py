@@ -8,10 +8,12 @@ reverse on write (ogr_writer_node.cpp:179, :42-57). Here:
   codegen — zero Python on the hot path, and the same closed form the
   DuckDB oracles run).
 - Transverse Mercator / UTM uses the numpy series kernels
-  (kernels/crs.py) behind a vectorized pandas UDF (one Arrow batch,
-  one numpy pass).
-- transform_ring_col transforms array<array<double>> ring columns in
-  ragged batch form.
+  (kernels/crs.py): for x/y columns behind a vectorized pandas UDF
+  (one Arrow batch, one numpy pass).
+- transform_ring_col transforms array<array<double>> ring columns with
+  the same kernels, as an arrow_udf on the ``kernels.geom`` Arrow ring
+  boundary: the batch's vertices are transformed in one pass, the ring
+  offsets pass through unchanged and a NULL ring stays NULL.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -80,17 +83,15 @@ def transform_cols(x: Column, y: Column, src: str, dst: str) -> tuple[Column, Co
 def transform_ring_col(ring: Column, src: str, dst: str) -> Column:
     """array<array<double>> ring in ``src`` -> ring in ``dst`` (x, y
     transformed; any extra coordinate, e.g. z, passes through). One
-    ragged numpy pass per Arrow batch."""
+    ragged numpy pass per Arrow batch; NULL rings stay NULL."""
     from gfp_gdal_spark.kernels import geom as _g
 
-    @F.pandas_udf(T.ArrayType(T.ArrayType(T.DoubleType())))
-    def _tf(s: pd.Series) -> pd.Series:
-        flat, off = _g.ragged_from_lists(s.tolist())
+    @F.arrow_udf(T.ArrayType(T.ArrayType(T.DoubleType())))
+    def _tf(a: pa.Array) -> pa.Array:
+        off, flat, valid = _g.ragged_from_arrow(a)
+        flat = flat.copy()
         if flat.shape[0]:
-            x, y = _crs.transform(flat[:, 0], flat[:, 1], src, dst)
-            flat = flat.copy()
-            flat[:, 0] = x
-            flat[:, 1] = y
-        return pd.Series(_g.ragged_to_lists(flat, off))
+            flat[:, 0], flat[:, 1] = _crs.transform(flat[:, 0], flat[:, 1], src, dst)
+        return _g.ragged_to_arrow(flat, off, valid)
 
     return _tf(ring)

@@ -1,114 +1,110 @@
-"""Geometry pandas UDFs over the ragged-ring numpy kernels.
+"""Geometry column functions over the ragged-ring numpy kernels.
 
-Each UDF converts the Arrow batch to (flat, offsets) ragged form once
-and runs one vectorized kernel pass — the Spark-idiomatic replacement
-for the reference's per-feature loops (ogr_reader_node.cpp:236,
-geos_nodes.cpp:141,193).
+Every Python ring function is an ``F.arrow_udf``: it reads the Arrow
+``list<list<double>>`` batch through ``kernels.geom.ragged_from_arrow``
+into (offsets, flat) ragged form, runs one vectorized kernel pass and
+writes the result back with ``kernels.geom.ragged_to_arrow`` — no
+pandas and no per-vertex Python object. It is the Spark-idiomatic
+replacement for the reference's per-feature loops
+(ogr_reader_node.cpp:236, geos_nodes.cpp:141,193). The rest of the
+module is pure-JVM Column expressions.
 
-Ring column type: ``array<array<double>>`` (inner = [x, y]);
-holes column type: ``array<array<array<double>>>``.
+Ring column type: ``array<array<double>>`` (inner = [x, y] or
+[x, y, z], the same width across a batch); holes column type:
+``array<array<array<double>>>``.
+
+NULL rule: a NULL ring gives NULL — a NULL value, ring or, for the
+struct results, a NULL struct. An empty ring is not NULL: it keeps its
+own result (area 0.0, not valid, 'POLYGON EMPTY', an empty ring).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gfp_gdal_spark.kernels import geom as _g
 
-RING_T = T.ArrayType(T.ArrayType(T.DoubleType()))
-HOLES_T = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
+RING_T = "array<array<double>>"
 
 
-def _ragged(s: pd.Series):
-    return _g.ragged_from_lists(s.tolist())
+def _to_arrow(v, valid: np.ndarray | None = None) -> pa.Array:
+    """A kernel result -> one Arrow value per row, NULL where ``valid``
+    is False: a (flat, offsets) pair is a ring, a dict a struct of its
+    values, anything else a scalar column."""
+    if isinstance(v, tuple):
+        return _g.ragged_to_arrow(*v, valid)
+    if isinstance(v, dict):
+        return pa.StructArray.from_arrays(
+            [_to_arrow(x) for x in v.values()], names=list(v), mask=pa.array(~valid)
+        )
+    return pa.array(v, mask=None if valid is None else ~valid)
+
+
+def _ring_udf(out_t: str, fn):
+    """``fn(flat, offsets) -> kernel result`` as an arrow_udf over one
+    ring column: read through ``kernels.geom.ragged_from_arrow``,
+    written through :func:`_to_arrow`, NULL for a NULL ring."""
+
+    @F.arrow_udf(out_t)
+    def _f(a: pa.Array) -> pa.Array:
+        off, flat, valid = _g.ragged_from_arrow(a)
+        return _to_arrow(fn(flat, off), valid)
+
+    return _f
 
 
 def ring_area(ring: Column) -> Column:
     """|shoelace| area — OGRLoader's derived `area` (ogr_reader_node.cpp:275,287)."""
-    @F.pandas_udf(T.DoubleType())
-    def _f(s: pd.Series) -> pd.Series:
-        flat, off = _ragged(s)
-        return pd.Series(abs(_g.signed_area(flat, off)))
-
-    return _f(ring)
+    return _ring_udf("double", lambda flat, off: np.abs(_g.signed_area(flat, off)))(ring)
 
 
 def ring_is_ccw(ring: Column) -> Column:
-    @F.pandas_udf(T.BooleanType())
-    def _f(s: pd.Series) -> pd.Series:
-        flat, off = _ragged(s)
-        # sign of the normalized area: unscaled cross terms overflow
-        return pd.Series(_g.signed_area(_g._pow2_normalized(flat, off), off) > 0)
-
-    return _f(ring)
+    # sign of the normalized area: unscaled cross terms overflow
+    return _ring_udf(
+        "boolean", lambda flat, off: _g.signed_area(_g._pow2_normalized(flat, off), off) > 0
+    )(ring)
 
 
 def ring_is_valid(ring: Column) -> Column:
     """Validity — OGRLoader's `is_valid` (ogr_reader_node.cpp:265,276,288)."""
-    @F.pandas_udf(T.BooleanType())
-    def _f(s: pd.Series) -> pd.Series:
-        flat, off = _ragged(s)
-        return pd.Series(_g.rings_valid(flat, off))
-
-    return _f(ring)
+    return _ring_udf("boolean", _g.rings_valid)(ring)
 
 
 def orient_ring(ring: Column, ccw: bool = True) -> Column:
     """Canonical orientation (ogr_reader_node.cpp:86-99; geos_nodes.cpp:31-67)."""
-    @F.pandas_udf(RING_T)
-    def _f(s: pd.Series) -> pd.Series:
-        flat, off = _ragged(s)
-        out = _g.orient_rings(flat, off, ccw=ccw)
-        return pd.Series(_g.ragged_to_lists(out, off))
-
-    return _f(ring)
+    return _ring_udf(RING_T, lambda flat, off: (_g.orient_rings(flat, off, ccw=ccw), off))(ring)
 
 
 def ring_wkt(ring: Column, holes: Column | None = None) -> Column:
     """WKT emit — OGRLoader `wkt` terminal (ogr_reader_node.cpp:245).
-
-    NOTE: triply-nested array columns (holes) cross the Arrow boundary
-    as JSON strings — this environment's pyarrow segfaults converting a
-    null/empty outer list<list<list<double>>> to pandas; to_json round-
-    trips doubles exactly (shortest-repr) and sidesteps the crash."""
+    The holes column is read through the same Arrow boundary, one list
+    level above its rings; a NULL holes value means no holes."""
     if holes is None:
-        @F.pandas_udf(T.StringType())
-        def _f(s: pd.Series) -> pd.Series:
-            flat, off = _ragged(s)
-            return pd.Series(_g.rings_to_wkt(flat, off))
+        return _ring_udf("string", _g.rings_to_wkt)(ring)
 
-        return _f(ring)
+    @F.arrow_udf("string")
+    def _fh(a: pa.Array, h: pa.Array) -> pa.Array:
+        off, flat, valid = _g.ragged_from_arrow(a)
+        rows, hole_rings, _ = _g.arrow_list_level(h)
+        hoff, hflat, _ = _g.ragged_from_arrow(hole_rings)
+        return _to_arrow(_g.rings_to_wkt(flat, off, (rows, hflat, hoff)), valid)
 
-    import json
-
-    @F.pandas_udf(T.StringType())
-    def _fh(s: pd.Series, hs: pd.Series) -> pd.Series:
-        flat, off = _ragged(s)
-        holes_rows = [None if h is None else json.loads(h) for h in hs]
-        return pd.Series(_g.rings_to_wkt(flat, off, holes_rows))
-
-    return _fh(ring, F.to_json(holes))
+    return _fh(ring, holes)
 
 
 def simplify_ring(ring: Column, tolerance: float) -> Column:
     """Douglas–Peucker simplify -> struct(ring, ok). ok=False means the
     original ring was passed through (PolygonSimplifyGEOS failure
     semantics, geos_nodes.cpp:144-176)."""
-    out_t = T.StructType(
-        [T.StructField("ring", RING_T), T.StructField("ok", T.BooleanType())]
-    )
 
-    @F.pandas_udf(out_t)
-    def _f(s: pd.Series) -> pd.DataFrame:
-        flat, off = _ragged(s)
+    def f(flat, off):
         nf, no, ok = _g.simplify_rings(flat, off, tolerance)
-        return pd.DataFrame({"ring": _g.ragged_to_lists(nf, no), "ok": ok})
+        return {"ring": (nf, no), "ok": ok}
 
-    return _f(ring)
+    return _ring_udf(f"struct<ring: {RING_T}, ok: boolean>", f)(ring)
 
 
 def buffer_ring(ring: Column, offset: float, method: str = "round", quad_segs: int = 8) -> Column:
@@ -119,21 +115,15 @@ def buffer_ring(ring: Column, offset: float, method: str = "round", quad_segs: i
     (GEOS quadrantSegments semantics; negative = inward miter).
     method="bbox": the axis-aligned bbox kernel (exact for the
     engine's footprint quads, cheaper)."""
-    out_t = T.StructType(
-        [T.StructField("ring", RING_T), T.StructField("ok", T.BooleanType())]
-    )
-    kern = _g.buffer_convex_rings if method == "round" else _g.buffer_bbox_rings
 
-    @F.pandas_udf(out_t)
-    def _f(s: pd.Series) -> pd.DataFrame:
-        flat, off = _ragged(s)
+    def f(flat, off):
         if method == "round":
-            nf, no, ok = kern(flat, off, offset, quad_segs)
+            nf, no, ok = _g.buffer_convex_rings(flat, off, offset, quad_segs)
         else:
-            nf, no, ok = kern(flat, off, offset)
-        return pd.DataFrame({"ring": _g.ragged_to_lists(nf, no), "ok": ok})
+            nf, no, ok = _g.buffer_bbox_rings(flat, off, offset)
+        return {"ring": (nf, no), "ok": ok}
 
-    return _f(ring)
+    return _ring_udf(f"struct<ring: {RING_T}, ok: boolean>", f)(ring)
 
 
 # ---------------------------------------------------------------------------
@@ -287,88 +277,32 @@ def ring_centroid(ring: Column) -> Column:
 
 
 def points_hull(points: Column) -> Column:
-    """Convex hull of a point array (array<array<double>>) — Andrew's
-    monotone chain (1979) with STRICT turns, so collinear boundary
-    points are excluded. Returns struct(ring, n_hull, hull_area):
-    hull ring CCW, unclosed, starting at the lexicographic-min vertex
-    (canonical — deterministic across runs/engines); area by the
-    shoelace formula (0 for degenerate <3-point hulls). Arrow-batched
-    pandas UDF; per-ROW work is one numpy chain over that row's
-    points (rows here are per-key aggregates, not raw points)."""
-    out_t = T.StructType(
-        [
-            T.StructField("ring", T.ArrayType(T.ArrayType(T.DoubleType()))),
-            T.StructField("n_hull", T.IntegerType()),
-            T.StructField("hull_area", T.DoubleType()),
-        ]
-    )
+    """Convex hull of a point array (array<array<double>>) —
+    ``kernels.geom.convex_hulls`` (Andrew's monotone chain, STRICT
+    turns, so collinear boundary points are excluded). Returns
+    struct(ring, n_hull, hull_area): hull ring CCW, unclosed, starting
+    at the lexicographic-min vertex; area by the shoelace formula (0
+    for degenerate <3-point hulls). Per-ROW work is one chain over
+    that row's points (rows here are per-key aggregates, not raw
+    points)."""
 
-    def _hull_one(arr) -> tuple:
-        pts = np.asarray([np.asarray(p, dtype=np.float64) for p in arr])
-        pts = np.unique(pts[:, :2], axis=0)  # lexicographic sort + dedup
-        if len(pts) == 1:
-            return ([pts[0].tolist()], 1, 0.0)
+    def f(flat, off):
+        hf, ho, area = _g.convex_hulls(flat, off)
+        return {"ring": (hf, ho), "n_hull": np.diff(ho).astype(np.int32), "hull_area": area}
 
-        def chain(seq):
-            out: list = []
-            for p in seq:
-                while len(out) >= 2 and (
-                    (out[-1][0] - out[-2][0]) * (p[1] - out[-2][1])
-                    - (out[-1][1] - out[-2][1]) * (p[0] - out[-2][0])
-                ) <= 0:
-                    out.pop()
-                out.append(p)
-            return out
-
-        lower = chain(pts)
-        upper = chain(pts[::-1])
-        hull = lower[:-1] + upper[:-1]
-        n = len(hull)
-        area = 0.0
-        for i in range(n):
-            x0, y0 = hull[i][0], hull[i][1]
-            x1, y1 = hull[(i + 1) % n][0], hull[(i + 1) % n][1]
-            area += x0 * y1 - x1 * y0
-        return ([p.tolist() for p in hull], n, abs(area) / 2.0)
-
-    @F.pandas_udf(out_t)
-    def _f(s: pd.Series) -> pd.DataFrame:
-        rows = [_hull_one(arr) for arr in s]
-        return pd.DataFrame(
-            {
-                "ring": [r[0] for r in rows],
-                "n_hull": [r[1] for r in rows],
-                "hull_area": [r[2] for r in rows],
-            }
-        )
-
-    return _f(points)
+    return _ring_udf(f"struct<ring: {RING_T}, n_hull: int, hull_area: double>", f)(points)
 
 
 def segmentize_ring(ring: Column, max_len: float, closed: bool = True) -> Column:
     """Densify so no segment exceeds ``max_len`` (the `ogr2ogr
     -segmentize` rule); original vertices preserved exactly."""
-
-    @F.pandas_udf(RING_T)
-    def _f(s: pd.Series) -> pd.Series:
-        flat, off = _ragged(s)
-        nf, no = _g.segmentize_rings(flat, off, max_len, closed=closed)
-        return pd.Series(_g.ragged_to_lists(nf, no))
-
-    return _f(ring)
+    return _ring_udf(RING_T, lambda flat, off: _g.segmentize_rings(flat, off, max_len, closed=closed))(ring)
 
 
 def simplify_line(points: Column, tol: float) -> Column:
     """DP-simplify an OPEN polyline (endpoints anchored, no ring
     gates) — the line-layer side of `ogr2ogr -simplify`."""
-
-    @F.pandas_udf(RING_T)
-    def _f(s: pd.Series) -> pd.Series:
-        flat, off = _ragged(s)
-        nf, no = _g.simplify_lines(flat, off, tol)
-        return pd.Series(_g.ragged_to_lists(nf, no))
-
-    return _f(points)
+    return _ring_udf(RING_T, lambda flat, off: _g.simplify_lines(flat, off, tol))(points)
 
 
 def clip_ring_bbox(
@@ -377,17 +311,9 @@ def clip_ring_bbox(
     """Sutherland-Hodgman rect clip -> struct(ring, area). Fully
     outside rings come back empty with area 0.0 (the operator layer
     decides whether to drop them)."""
-    out_t = T.StructType(
-        [T.StructField("ring", RING_T), T.StructField("area", T.DoubleType())]
-    )
 
-    @F.pandas_udf(out_t)
-    def _f(s: pd.Series) -> pd.DataFrame:
-        flat, off = _ragged(s)
+    def f(flat, off):
         nf, no = _g.clip_rings_bbox(flat, off, xmin, ymin, xmax, ymax)
-        return pd.DataFrame(
-            {"ring": _g.ragged_to_lists(nf, no),
-             "area": np.abs(_g.signed_area(nf, no))}
-        )
+        return {"ring": (nf, no), "area": np.abs(_g.signed_area(nf, no))}
 
-    return _f(ring)
+    return _ring_udf(f"struct<ring: {RING_T}, area: double>", f)(ring)

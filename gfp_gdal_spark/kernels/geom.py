@@ -1,4 +1,5 @@
-"""Vectorized ragged-ring geometry kernels (pure numpy).
+"""Vectorized ragged-ring geometry kernels (pure numpy) and the one
+Arrow boundary every ring UDF and mapInArrow pass goes through.
 
 Canonical geometry form (mirrors the reference's ring canon,
 ogr_reader_node.cpp:86-107 and geos_nodes.cpp:31-67,110-117):
@@ -9,12 +10,14 @@ ogr_reader_node.cpp:86-107 and geos_nodes.cpp:31-67,110-117):
 
 Batch ("ragged") layout used by every kernel:
 
-    flat    : float64[total_vertices, 2]   all rings concatenated
-    offsets : int64[n_rings + 1]           ring i = flat[offsets[i]:offsets[i+1]]
+    flat    : float64[total_vertices, 2|3]  all rings concatenated
+    offsets : int64[n_rings + 1]            ring i = flat[offsets[i]:offsets[i+1]]
 
-This is exactly an Arrow `list<fixed2 double>` layout, so conversion
-from a pandas Series of list-of-[x, y] is a cheap concatenate and the
-kernels stay fully vectorized across an entire Arrow batch.
+An Arrow ``list<list<double>>`` batch holds exactly this layout: ring
+offsets outside, ``flat`` inside. :func:`ragged_from_arrow` reads it off
+the buffers and :func:`ragged_to_arrow` writes it back (holes and
+triangle lists: one more :func:`arrow_list_level`); the numpy oracles
+build it from Python lists with :func:`ragged_from_lists`.
 """
 
 from __future__ import annotations
@@ -22,10 +25,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 
 __all__ = [
+    "arrow_list_level",
+    "ragged_from_arrow",
+    "ragged_to_arrow",
     "ragged_from_lists",
-    "ragged_to_lists",
     "signed_area",
     "orient_rings",
     "ring_bbox",
@@ -40,21 +46,65 @@ __all__ = [
     "clip_rings_bbox",
     "segmentize_rings",
     "simplify_lines",
+    "convex_hulls",
     "rings_to_wkt",
+    "triangles_to_wkt",
     "haversine",
 ]
 
 
 # ---------------------------------------------------------------------------
-# ragged conversion
+# ragged conversion: the Arrow boundary, and Python lists for the oracles
 # ---------------------------------------------------------------------------
 
-def _ring_pts(r) -> np.ndarray:
-    """One ring (list of [x,y(,z)] / ndarray of ndarrays from Arrow) ->
-    (n_pts, width) float64 array; width 2 (xy) or 3 (xyz)."""
-    if isinstance(r, np.ndarray) and r.dtype == object:
-        return np.stack([np.asarray(p, dtype=np.float64) for p in r])
-    return np.atleast_2d(np.asarray(r, dtype=np.float64))
+def arrow_list_level(a: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, pa.Array, np.ndarray]:
+    """One Arrow list level -> (offsets int64[n+1] from 0, the child
+    array they index, valid bool[n]). Takes sliced (``a.offset`` != 0)
+    and chunked arrays and an empty array with no offsets buffer; a
+    NULL row gets zero extent even where its offsets span values."""
+    if isinstance(a, pa.ChunkedArray):
+        a = a.combine_chunks()
+    if len(a) == 0:  # may have no offsets buffer
+        return np.zeros(1, np.int64), pa.array([], a.type.value_type), np.zeros(0, bool)
+    off = a.offsets.to_numpy().astype(np.int64)
+    child = a.values.slice(off[0], off[-1] - off[0])
+    off -= off[0]
+    if a.null_count == 0:
+        return off, child, np.ones(len(a), bool)
+    valid = a.is_valid().to_numpy(zero_copy_only=False)
+    counts = np.diff(off)
+    if counts[~valid].any():
+        child = child.filter(pa.array(np.repeat(valid, counts)))
+        counts[~valid] = 0
+        off = np.concatenate(([0], np.cumsum(counts)))
+    return off, child, valid
+
+
+def ragged_from_arrow(a: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``list<list<double>>`` rings -> (offsets int64[n+1], flat
+    float64[m, 2|3], valid bool[n]). NULL rows read as empty rings
+    with ``valid`` False; a NULL coordinate reads as NaN. Every vertex
+    of the batch must have the same width, 2 (xy) or 3 (xyz)."""
+    off, pts, valid = arrow_list_level(a)
+    voff, coords, _ = arrow_list_level(pts)
+    widths = np.diff(voff)
+    w = int(widths[0]) if len(widths) else 2
+    if (widths != w).any() or w not in (2, 3):
+        raise ValueError("mixed 2D/3D rings in one batch: vertices are all [x, y] or all [x, y, z]")
+    flat = coords.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return off, flat.reshape(-1, w), valid
+
+
+def ragged_to_arrow(flat: np.ndarray, offsets: np.ndarray, valid: np.ndarray | None = None) -> pa.ListArray:
+    """Inverse of :func:`ragged_from_arrow`: a ``list<list<double>>``
+    array, NULL where ``valid`` is False."""
+    n, w = flat.shape
+    pts = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * w + 1, w, dtype=np.int32)),
+        pa.array(np.ascontiguousarray(flat, dtype=np.float64).ravel()),
+    )
+    mask = None if valid is None or valid.all() else pa.array(~valid)
+    return pa.ListArray.from_arrays(pa.array(np.asarray(offsets, np.int32)), pts, mask=mask)
 
 
 def ragged_from_lists(rings) -> tuple[np.ndarray, np.ndarray]:
@@ -62,11 +112,7 @@ def ragged_from_lists(rings) -> tuple[np.ndarray, np.ndarray]:
     Empty/None rings ok. width is 2 for xy rings, 3 for xyz rings
     (reference geometry is xyz throughout — arr3f,
     ogr_reader_node.cpp:93); all the planar kernels read columns 0..1
-    and carry any z column through untouched.
-
-    Accepts both plain Python nested lists and the object-ndarray form
-    Arrow/pandas hands to a pandas UDF for array<array<double>>.
-    """
+    and carry any z column through untouched."""
     counts = np.fromiter(
         (0 if r is None else len(r) for r in rings), dtype=np.int64, count=len(rings)
     )
@@ -74,17 +120,12 @@ def ragged_from_lists(rings) -> tuple[np.ndarray, np.ndarray]:
     np.cumsum(counts, out=offsets[1:])
     if offsets[-1] == 0:
         return np.empty((0, 2), dtype=np.float64), offsets
-    parts = [_ring_pts(r) for r in rings if r is not None and len(r)]
+    parts = [np.atleast_2d(np.asarray(r, dtype=np.float64)) for r in rings if r is not None and len(r)]
     width = parts[0].shape[1]
     if any(p.shape[1] != width for p in parts):
         raise ValueError("mixed 2D/3D rings in one batch")
     flat = np.concatenate(parts, axis=0)
     return flat, offsets
-
-
-def ragged_to_lists(flat: np.ndarray, offsets: np.ndarray) -> list:
-    """Inverse of :func:`ragged_from_lists` (list of [ [x,y], ... ])."""
-    return [flat[offsets[i]: offsets[i + 1]].tolist() for i in range(len(offsets) - 1)]
 
 
 def _segment_index(offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -502,13 +543,7 @@ def simplify_rings(flat: np.ndarray, offsets: np.ndarray, tol: float):
             continue
         out_rings.append(simp)
         ok[i] = True
-    counts = np.array([r.shape[0] for r in out_rings], dtype=np.int64)
-    new_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=new_off[1:])
-    new_flat = (
-        np.concatenate(out_rings, axis=0) if new_off[-1] else np.empty((0, 2), np.float64)
-    )
-    return new_flat, new_off, ok
+    return (*ragged_from_lists(out_rings), ok)
 
 
 def buffer_bbox_rings(flat: np.ndarray, offsets: np.ndarray, offset: float):
@@ -533,13 +568,7 @@ def buffer_bbox_rings(flat: np.ndarray, offsets: np.ndarray, offset: float):
             np.array([[nx0, ny0], [nx1, ny0], [nx1, ny1], [nx0, ny1]], dtype=np.float64)
         )
         ok[i] = True
-    counts = np.array([r.shape[0] for r in out_rings], dtype=np.int64)
-    new_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=new_off[1:])
-    new_flat = (
-        np.concatenate(out_rings, axis=0) if new_off[-1] else np.empty((0, 2), np.float64)
-    )
-    return new_flat, new_off, ok
+    return (*ragged_from_lists(out_rings), ok)
 
 
 def buffer_convex_rings(
@@ -677,40 +706,59 @@ def buffer_convex_rings(
                 continue
         out_rings.append(new)
         ok[i] = True
-    counts = np.array([r.shape[0] for r in out_rings], dtype=np.int64)
-    new_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=new_off[1:])
-    new_flat = (
-        np.concatenate(out_rings, axis=0) if new_off[-1] else np.empty((0, 2), np.float64)
-    )
-    return new_flat, new_off, ok
+    return (*ragged_from_lists(out_rings), ok)
 
 
 # ---------------------------------------------------------------------------
 # WKT emit — S8 `wkt` output (ogr_reader_node.cpp:245)
 # ---------------------------------------------------------------------------
 
-def rings_to_wkt(flat, offsets, holes_per_row=None) -> list[str]:
+def _wkt_ring(pts: np.ndarray) -> str:
+    """'(x y[ z], ..., x0 y0[ z0])': the ring re-closed, %.9g floats."""
+    closed = np.vstack([pts, pts[:1]])
+    return "(" + ", ".join(" ".join(f"{v:.9g}" for v in p) for p in closed) + ")"
+
+
+def rings_to_wkt(flat, offsets, holes=None) -> list[str]:
     """POLYGON wkt per row (ring re-closed on emit, like writers re-close:
     ogr_writer_node.cpp:47,59). Empty ring -> 'POLYGON EMPTY'; xyz
-    rings emit 'POLYGON Z' (the reference's 2.5D output shape)."""
+    rings emit 'POLYGON Z' (the reference's 2.5D output shape).
+    ``holes`` = (rows, hole_flat, hole_offsets): row i's holes are
+    rings rows[i]..rows[i+1]-1 of that ragged table; empty holes are
+    left out."""
     out = []
-    n = len(offsets) - 1
-    tag = "POLYGON Z" if flat.shape[0] and flat.shape[1] == 3 else "POLYGON"
-    for i in range(n):
+    tag = "POLYGON Z" if flat.shape[1] == 3 else "POLYGON"
+    for i in range(len(offsets) - 1):
         pts = flat[offsets[i]: offsets[i + 1]]
         if pts.shape[0] == 0:
             out.append("POLYGON EMPTY")
             continue
-        def fmt(ring_pts):
-            closed = np.vstack([ring_pts, ring_pts[:1]])
-            return "(" + ", ".join(" ".join(f"{v:.9g}" for v in p) for p in closed) + ")"
-        parts = [fmt(pts)]
-        hi = holes_per_row[i] if holes_per_row is not None else None
-        if hi is not None and len(hi) > 0:
-            for h in hi:
-                parts.append(fmt(_ring_pts(h)))
+        parts = [_wkt_ring(pts)]
+        if holes is not None:
+            rows, hflat, hoff = holes
+            parts += [
+                _wkt_ring(hflat[hoff[j]: hoff[j + 1]])
+                for j in range(rows[i], rows[i + 1]) if hoff[j + 1] > hoff[j]
+            ]
         out.append(tag + " (" + ", ".join(parts) + ")")
+    return out
+
+
+def triangles_to_wkt(rows, flat, offsets) -> list[str]:
+    """MULTIPOLYGON[ Z] wkt per row of a triangle collection, one
+    polygon per triangle: row i's triangles are rings
+    rows[i]..rows[i+1]-1 of the ragged table. No triangle ->
+    'MULTIPOLYGON EMPTY'."""
+    tag = "MULTIPOLYGON Z " if flat.shape[1] == 3 else "MULTIPOLYGON "
+    out = []
+    for i in range(len(rows) - 1):
+        if rows[i + 1] == rows[i]:
+            out.append("MULTIPOLYGON EMPTY")
+            continue
+        polys = ", ".join(
+            "(" + _wkt_ring(flat[offsets[j]: offsets[j + 1]]) + ")" for j in range(rows[i], rows[i + 1])
+        )
+        out.append(tag + "(" + polys + ")")
     return out
 
 
@@ -756,8 +804,6 @@ def clip_rings_bbox(
     """
     f = np.asarray(flat, dtype=np.float64)
     off = np.asarray(offsets, dtype=np.int64)
-    if f.ndim == 1:
-        f = f.reshape(0, 2)
     for axis, sgn, bound in (
         (0, 1.0, xmin), (0, -1.0, xmax), (1, 1.0, ymin), (1, -1.0, ymax)
     ):
@@ -816,8 +862,6 @@ def segmentize_rings(
         raise ValueError(f"max_len must be > 0: {max_len!r}")
     f = np.asarray(flat, dtype=np.float64)
     off = np.asarray(offsets, dtype=np.int64)
-    if f.ndim == 1:
-        f = f.reshape(0, 2)
     n = len(off) - 1
     total = int(off[-1])
     if total == 0:
@@ -879,10 +923,48 @@ def simplify_lines(
             out.append(pts)
             continue
         out.append(pts[_dp_mask(pts, tol)])
-    counts = np.array([r.shape[0] for r in out], dtype=np.int64)
-    new_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=new_off[1:])
-    new_flat = (
-        np.concatenate(out, axis=0) if new_off[-1] else np.empty((0, 2), np.float64)
-    )
-    return new_flat, new_off
+    return ragged_from_lists(out)
+
+
+# ---------------------------------------------------------------------------
+# convex hull of a point set (the GEOS convex-hull node's per-row analog)
+# ---------------------------------------------------------------------------
+
+def _chain(seq) -> list:
+    """One monotone-chain pass; STRICT turns drop collinear points."""
+    out: list = []
+    for p in seq:
+        while len(out) >= 2 and (
+            (out[-1][0] - out[-2][0]) * (p[1] - out[-2][1])
+            - (out[-1][1] - out[-2][1]) * (p[0] - out[-2][0])
+        ) <= 0:
+            out.pop()
+        out.append(p)
+    return out
+
+
+def convex_hulls(
+    flat: np.ndarray, offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Convex hull of each row's points — Andrew's monotone chain
+    (1979) over the xy-deduplicated, lexicographically sorted points.
+    Returns (hull_flat[:, 2], hull_offsets, area): each hull CCW,
+    unclosed, starting at the lexicographic-min vertex (canonical, so
+    deterministic across runs and engines); area by the shoelace
+    formula, 0 for hulls of < 3 points."""
+    n = len(offsets) - 1
+    hulls, area = [], np.zeros(n, dtype=np.float64)
+    for i in range(n):
+        pts = np.unique(flat[offsets[i]: offsets[i + 1], :2], axis=0)
+        if len(pts) <= 1:
+            hulls.append(pts)
+            continue
+        hull = _chain(pts)[:-1] + _chain(pts[::-1])[:-1]
+        m, a = len(hull), 0.0
+        for k in range(m):
+            x0, y0 = hull[k][0], hull[k][1]
+            x1, y1 = hull[(k + 1) % m][0], hull[(k + 1) % m][1]
+            a += x0 * y1 - x1 * y0
+        hulls.append(np.array(hull))
+        area[i] = abs(a) / 2.0
+    return (*ragged_from_lists(hulls), area)

@@ -292,7 +292,7 @@ def simplify_polylines(df, tol: float, line: str = "line"):
     GEOS validity gates): endpoints anchored, interior vertices within
     ``tol`` of the chord dropped, originals preserved bit-exactly.
 
-    Scale: one vectorized pandas UDF — narrow, shuffle-free."""
+    Scale: one vectorized Arrow UDF — narrow, shuffle-free."""
     from pyspark.sql import functions as F
 
     from gfp_gdal_spark.functions.geometry import simplify_line

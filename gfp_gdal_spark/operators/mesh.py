@@ -12,17 +12,18 @@ Reference (ogr_writer_node.cpp):
 Engine shape: a triangle collection is a column
 ``array<array<array<double>>>`` (triangles x 3 vertices x [x,y(,z)]);
 a multi-collection adds one nesting level. The fan-outs are pure-JVM
-posexplode + aggregate expressions; WKT emit is one ragged numpy pass
-per Arrow batch.
+posexplode + aggregate expressions; WKT emit is an arrow_udf that reads
+the triangle lists through the ``kernels.geom`` Arrow ring boundary.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from gfp_gdal_spark.kernels import geom as _g
 
 __all__ = [
     "mesh_parts_to_rows",
@@ -70,28 +71,14 @@ def triangles_stats(df: DataFrame, tris: str = "triangles") -> DataFrame:
 def triangles_wkt_col(tris: Column) -> Column:
     """MULTIPOLYGON[ Z] wkt of a triangle collection (each triangle one
     polygon, ring re-closed on emit, %.9g floats — same float format as
-    kernels.geom.rings_to_wkt). Triangle arrays cross the Arrow
-    boundary as JSON (this environment's pyarrow segfaults converting
-    null/empty deeply-nested lists to pandas)."""
-    import json
+    kernels.geom.rings_to_wkt). The triangle lists are read one list
+    level above ``kernels.geom.ragged_from_arrow``; a NULL collection
+    gives NULL, an empty one 'MULTIPOLYGON EMPTY'."""
 
-    @F.pandas_udf(T.StringType())
-    def _wkt(js: pd.Series) -> pd.Series:
-        out = []
-        s = [None if t is None else json.loads(t) for t in js]
-        for tri_list in s:
-            if tri_list is None or len(tri_list) == 0:
-                out.append("MULTIPOLYGON EMPTY")
-                continue
-            first = np.asarray(tri_list[0][0], dtype=np.float64)
-            tag = "MULTIPOLYGON Z " if first.shape[0] == 3 else "MULTIPOLYGON "
-            polys = []
-            for t in tri_list:
-                pts = [np.asarray(p, dtype=np.float64) for p in t]
-                pts.append(pts[0])
-                ring = ", ".join(" ".join(f"{v:.9g}" for v in p) for p in pts)
-                polys.append(f"(({ring}))")
-            out.append(tag + "(" + ", ".join(polys) + ")")
-        return pd.Series(out)
+    @F.arrow_udf(T.StringType())
+    def _wkt(a: pa.Array) -> pa.Array:
+        rows, tri, valid = _g.arrow_list_level(a)
+        off, flat, _ = _g.ragged_from_arrow(tri)
+        return pa.array(_g.triangles_to_wkt(rows, flat, off), mask=~valid)
 
-    return _wkt(F.to_json(tris))
+    return _wkt(tris)

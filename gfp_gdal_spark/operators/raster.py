@@ -594,7 +594,7 @@ def rasterize_zones(
     (``z``, ``broadcast``, ...) are accepted and have nothing to tune.
     Returns (key, w, h, n_burned, val_sum, bytes, fmt), counts exact.
     """
-    from gfp_gdal_spark.kernels.geom import scanline_burn
+    from gfp_gdal_spark.kernels.geom import arrow_list_level, ragged_from_arrow, scanline_burn
     from gfp_gdal_spark.operators.joins import ring_bbox_cols
 
     ring, holes = pip_kwargs.get("ring", "ring"), pip_kwargs.get("holes", "holes")
@@ -623,19 +623,15 @@ def rasterize_zones(
     types = ["string", "int", "int", "long", "long", "binary", "string"]
     nd, out_fmt = nodata, fmt
 
-    def offs(a):  # an empty list array may come with no offsets buffer
-        return a.offsets.to_numpy().astype(np.int64) if len(a) else np.zeros(1, np.int64)
-
-    def pts(a):  # list<list<double>> -> (ring offsets, (n, 2) vertices)
-        d, po = a.values.values.to_numpy(zero_copy_only=False), offs(a.values)[:-1]
-        return offs(a), np.stack([d[po], d[po + 1]], 1)
-
     def op(batches):
         tune_worker()
         for b in batches:
             col = {c: b.column(c) for c in b.schema.names}
-            r, h, v = col["_z"].values.flatten()
-            (ro, rv), (hro, hv), zo, ho, v = pts(r), pts(h.values), offs(col["_z"]), offs(h), v.to_numpy()
+            zo, zs, _ = arrow_list_level(col["_z"])
+            r, h, v = zs.flatten()
+            ho, h, _ = arrow_list_level(h)
+            (ro, rv, _), (hro, hv, _), v = ragged_from_arrow(r), ragged_from_arrow(h), v.to_numpy()
+            rv, hv = rv[:, :2], hv[:, :2]
             x0, y0, x1, y1, w, hh = (col[c].to_numpy() for c in ("_x0", "_y0", "_x1", "_y1", "_w", "_h"))
             n, s, enc = [], [], []
             for f in range(b.num_rows):

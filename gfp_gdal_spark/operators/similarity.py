@@ -216,7 +216,8 @@ def embedding_dedup_pairs(
     """Embedding-cosine near-duplicate pairs: sign-LSH bucket self-join
     (side A fans out to hamming<=multiprobe buckets), exact cosine
     verify >= threshold. The 10^12-row shape: candidates ~
-    n^2/2^bits * probes, never all-pairs; degenerate buckets capped."""
+    n^2/2^bits * probes, never all-pairs; degenerate buckets capped.
+    ``bits`` and ``max_bucket`` trade recall for speed."""
     from pyspark.sql import Window
 
     from itertools import combinations

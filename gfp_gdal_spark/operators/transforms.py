@@ -199,7 +199,7 @@ def segmentize_polygons(
     preserved bit-exactly; `simplify_polygons` is the inverse
     direction. ``closed=False`` treats rows as open polylines.
 
-    Scale: one vectorized repeat/arange pandas UDF — shuffle-free,
+    Scale: one vectorized repeat/arange Arrow UDF — shuffle-free,
     batch-sized state; output size is input_len/max_len-bounded, the
     same fan-out the caller asked for.
     """
@@ -224,7 +224,7 @@ def clip_polygons(
     ``drop_empty=True`` drops features that fall entirely outside
     (ogr2ogr semantics); ``False`` keeps them with an empty ring.
 
-    Scale: one vectorized Sutherland-Hodgman pandas UDF — narrow,
+    Scale: one vectorized Sutherland-Hodgman Arrow UDF — narrow,
     shuffle-free, batch-sized state.
     """
     from gfp_gdal_spark.functions.geometry import clip_ring_bbox

@@ -52,7 +52,9 @@ def test_orient_huge_and_tiny_coordinates(scale):
 def test_ragged_roundtrip():
     rings = [SQUARE, [], SQUARE_CW, None, [[1.0, 2.0]]]
     flat, off = ragged(rings)
-    back = G.ragged_to_lists(flat, off)
+    back = G.ragged_to_arrow(flat, off).to_pylist()
+    off2, flat2, valid = G.ragged_from_arrow(G.ragged_to_arrow(flat, off))
+    assert np.array_equal(off2, off) and np.array_equal(flat2, flat) and valid.all()
     assert back[0] == SQUARE
     assert back[1] == []
     assert back[3] == []
@@ -136,7 +138,7 @@ def test_simplify_passthrough_and_reduction():
     degenerate = [[0.0, 0.0], [1.0, 0.0]]
     flat, off = ragged([noisy, degenerate])
     nf, no, ok = G.simplify_rings(flat, off, 0.01)
-    out = G.ragged_to_lists(nf, no)
+    out = G.ragged_to_arrow(nf, no).to_pylist()
     assert ok.tolist() == [True, False]
     assert len(out[0]) == 4  # collinear-ish vertex removed
     assert out[1] == degenerate  # pass-through (geos_nodes.cpp:144-148)
@@ -151,7 +153,7 @@ def test_buffer_bbox():
     # negative buffer that inverts -> pass-through original
     nf2, no2, ok2 = G.buffer_bbox_rings(flat, off, -2.0)
     assert ok2.tolist() == [False]
-    assert G.ragged_to_lists(nf2, no2)[0] == SQUARE
+    assert G.ragged_to_arrow(nf2, no2).to_pylist()[0] == SQUARE
 
 
 def test_wkt():
@@ -160,8 +162,10 @@ def test_wkt():
     assert w[0] == "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
     assert w[1] == "POLYGON EMPTY"
     hole = [[0.5, 0.5], [0.5, 1.0], [1.0, 1.0], [1.0, 0.5]]
-    w2 = G.rings_to_wkt(flat, off, [[hole], None])
-    assert "(0.5 0.5," in w2[0]
+    hflat, hoff = ragged([hole, []])
+    w2 = G.rings_to_wkt(flat, off, (np.array([0, 2, 2]), hflat, hoff))
+    assert w2[0] == "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0), (0.5 0.5, 0.5 1, 1 1, 1 0.5, 0.5 0.5))"
+    assert w2[1] == "POLYGON EMPTY"
 
 
 @st.composite
@@ -230,10 +234,10 @@ def test_simplify_properties(poly, tol):
         assert G.signed_area(nf, no)[0] > 0  # re-oriented CCW
         # vertex 0 anchored as a MEMBER (the CCW re-orient may reverse
         # vertex order, as GEOS reverse does)
-        out0 = np.asarray(G.ragged_to_lists(nf, no)[0])
+        out0 = np.asarray(G.ragged_to_arrow(nf, no).to_pylist()[0])
         assert np.isclose(out0, np.asarray(poly[0])[None, :]).all(axis=1).any()
     else:
-        assert G.ragged_to_lists(nf, no)[0] == poly  # pass-through
+        assert G.ragged_to_arrow(nf, no).to_pylist()[0] == poly  # pass-through
 
 
 def test_haversine_known():

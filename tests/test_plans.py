@@ -5,8 +5,11 @@ against `.explain` output rather than taken on faith.
 - column pruning reaches the scan (ReadSchema);
 - tile_assign stays entirely JVM-side (no Python eval node);
 - pip_join(broadcast=True) plans a BroadcastHashJoin;
-- pip_join(broadcast=False) plans a shuffle join (no broadcast).
+- pip_join(broadcast=False) plans a shuffle join (no broadcast);
+- every ring, holes and triangle function plans as a scalar Arrow UDF.
 """
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -231,3 +234,25 @@ def test_iou_match_join_pure_jvm(spark):
     for marker in PY_MARKERS:
         assert marker not in plan, f"{marker} in plan:\n{plan}"
     assert out.count() > 0
+
+
+def test_ring_functions_plan_scalar_arrow_udf(spark):
+    """Every ring, holes and triangle function is one ArrowEvalPython
+    node of eval type 250 (SQL_SCALAR_ARROW_UDF), never 200
+    (SQL_SCALAR_PANDAS_UDF): the batch stays on the Arrow buffers."""
+    from gfp_gdal_spark.functions import geometry as GF
+    from gfp_gdal_spark.functions.crs import transform_ring_col
+    from gfp_gdal_spark.operators import mesh as M
+
+    df = spark.createDataFrame([], "ring array<array<double>>, holes array<array<array<double>>>")
+    r, h = F.col("ring"), F.col("holes")
+    cols = [
+        GF.ring_area(r), GF.ring_is_ccw(r), GF.ring_is_valid(r), GF.orient_ring(r),
+        GF.ring_wkt(r), GF.ring_wkt(r, h), GF.simplify_ring(r, 0.1), GF.buffer_ring(r, 0.1),
+        GF.buffer_ring(r, 0.1, method="bbox"), GF.points_hull(r), GF.segmentize_ring(r, 0.1),
+        GF.simplify_line(r, 0.1), GF.clip_ring_bbox(r, 0.0, 0.0, 1.0, 1.0),
+        transform_ring_col(r, "EPSG:4326", "EPSG:32633"), M.triangles_wkt_col(h),
+    ]
+    for c in cols:
+        plan = plan_of(df.select(c))
+        assert re.findall(r"ArrowEvalPython \[.*\], \[.*\], (\d+)", plan) == ["250"], plan

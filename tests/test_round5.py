@@ -2036,7 +2036,7 @@ def _sh_clip_ref(pts, xmin, ymin, xmax, ymax):
 
 def test_clip_rings_kernel_parity():
     from gfp_gdal_spark.kernels.geom import (
-        clip_rings_bbox, ragged_from_lists, ragged_to_lists, signed_area,
+        clip_rings_bbox, ragged_from_lists, ragged_to_arrow, signed_area,
     )
 
     rng = np.random.RandomState(17)
@@ -2051,7 +2051,7 @@ def test_clip_rings_kernel_parity():
         )
     flat, off = ragged_from_lists(rings)
     nf, no = clip_rings_bbox(flat, off, -1.0, -0.5, 1.5, 1.25)
-    got = ragged_to_lists(nf, no)
+    got = ragged_to_arrow(nf, no).to_pylist()
     for i, ring in enumerate(rings):
         want = _sh_clip_ref(ring, -1.0, -0.5, 1.5, 1.25)
         np.testing.assert_allclose(
@@ -2203,7 +2203,7 @@ def _segmentize_ref(pts, max_len, closed=True):
 @pytest.mark.parametrize("closed", [True, False])
 def test_segmentize_kernel_parity(closed):
     from gfp_gdal_spark.kernels.geom import (
-        ragged_from_lists, ragged_to_lists, segmentize_rings,
+        ragged_from_lists, ragged_to_arrow, segmentize_rings,
     )
 
     rng = np.random.RandomState(31)
@@ -2213,7 +2213,7 @@ def test_segmentize_kernel_parity(closed):
         rings.append(rng.uniform(-5, 5, (n, 2)).tolist())
     flat, off = ragged_from_lists(rings)
     nf, no = segmentize_rings(flat, off, 0.9, closed=closed)
-    got = ragged_to_lists(nf, no)
+    got = ragged_to_arrow(nf, no).to_pylist()
     for i, ring in enumerate(rings):
         want = _segmentize_ref(ring, 0.9, closed=closed)
         np.testing.assert_allclose(
@@ -2581,7 +2581,7 @@ def _dp_line_ref(pts, tol):
 
 def test_simplify_lines_kernel_parity():
     from gfp_gdal_spark.kernels.geom import (
-        ragged_from_lists, ragged_to_lists, simplify_lines,
+        ragged_from_lists, ragged_to_arrow, simplify_lines,
     )
 
     rng = np.random.RandomState(61)
@@ -2591,7 +2591,7 @@ def test_simplify_lines_kernel_parity():
         lines.append(rng.uniform(-5, 5, (n, 2)).tolist())
     flat, off = ragged_from_lists(lines)
     nf, no = simplify_lines(flat, off, 0.5)
-    got = ragged_to_lists(nf, no)
+    got = ragged_to_arrow(nf, no).to_pylist()
     for i, ln in enumerate(lines):
         np.testing.assert_allclose(
             np.array(got[i]), np.array(_dp_line_ref(ln, 0.5)), atol=0,
