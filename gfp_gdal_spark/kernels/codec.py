@@ -3,9 +3,11 @@
 The engine's analog of the reference's raster IO boundary
 (GDALReader/GDALWriter, gdal_nodes.cpp:274-342,344-424): images live
 in DataFrames as an opaque ``bytes`` binary column plus typed metadata
-(w, h, fmt) — exactly the BASELINE.json input_hint schema — and these
-codecs are the decode/encode kernels the pandas UDFs call per Arrow
-batch.
+(w, h, fmt) — exactly the BASELINE.json input_hint schema. Every
+flat-row image operator reads its Arrow batches through one reader
+here (``image_groups``: rows grouped by uniform (fmt, w, h), each
+group decoded whole from slices of the binary column's data buffer),
+and writes back with the group encoders.
 
 Formats:
 - ``ppm``  — binary P6 RGB, lossless.
@@ -22,54 +24,24 @@ import struct
 import zlib
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 __all__ = [
     "encode_image",
     "encode_group",
     "decode_image",
     "decode_group",
-    "group_by_shape",
+    "binary_buffers",
+    "shape_groups",
+    "image_groups",
+    "blob_views",
+    "blobs_by_row",
     "ahash_batch",
     "psnr",
     "synth_pixels",
 ]
 
-
-def group_by_shape(batch, id_col: str = "image_id", with_dims: bool = False):
-    """Group an Arrow image RecordBatch's row indices by uniform
-    (fmt, w, h) — the shared front half of every mapInArrow image
-    operator (``decode_group`` needs the shape up front, so the batch
-    is partitioned into uniform groups first).
-
-    Returns ``(ids, blobs, groups)``: ``ids`` is the id column as a
-    Python list (``None`` when ``id_col`` is absent from the batch),
-    ``blobs`` the Arrow binary column (index with ``blobs[i].as_py()``),
-    and ``groups`` a dict ``(fmt, w, h) -> [row indices]`` (empty for
-    an empty batch, so ``for ... in groups.items()`` degrades to a
-    no-op without a separate num_rows guard). ``with_dims=True``
-    appends the already-converted per-row ``(fmts, ws, hs)`` to the
-    tuple — for operators that re-emit those columns, so they don't
-    repeat the Arrow->Python conversion the grouping just did.
-    """
-    import collections
-
-    names = batch.schema.names
-    blobs = batch.column(names.index("bytes"))
-    ids = (
-        batch.column(names.index(id_col)).to_pylist() if id_col in names else None
-    )
-    groups: dict = collections.defaultdict(list)
-    fmts: list = []
-    ws = hs = None
-    if batch.num_rows:
-        fmts = batch.column(names.index("fmt")).to_pylist()
-        ws = batch.column(names.index("w")).to_numpy(zero_copy_only=False)
-        hs = batch.column(names.index("h")).to_numpy(zero_copy_only=False)
-        for i in range(batch.num_rows):
-            groups[(fmts[i], int(ws[i]), int(hs[i]))].append(i)
-    if with_dims:
-        return ids, blobs, groups, fmts, ws, hs
-    return ids, blobs, groups
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -236,12 +208,11 @@ def decode_image(data: bytes, fmt: str) -> np.ndarray:
     raise ValueError(f"unknown image fmt: {fmt!r}")
 
 
-def decode_group(blobs: list[bytes], fmt: str, w: int, h: int) -> np.ndarray:
-    """Whole-batch decode of a UNIFORM (fmt, w, h) group -> one pixel
-    tensor (n, h, w, 3) or (n, h, w). This is the scale path: inside a
-    mapInPandas/mapInArrow batch, group rows by (fmt, w, h) and decode
-    each group with numpy reshapes instead of a per-image Python loop
-    (the round-2 scaling bottleneck, VERDICT r02 'What's wrong' #1).
+def decode_group(blobs: list, fmt: str, w: int, h: int) -> np.ndarray:
+    """Whole-batch decode of a UNIFORM (fmt, w, h) group of bytes-like
+    blobs (``image_groups`` passes memoryview slices of the Arrow data
+    buffer) -> one pixel tensor (n, h, w, 3) or (n, h, w): numpy
+    reshapes instead of a per-image Python loop.
 
     - ppm/pgm: fixed layout -> single frombuffer + reshape, zero
       per-image Python.
@@ -440,6 +411,93 @@ def ahash_group_from_buffers(
             out[i] = ahash_batch(pix[None, ...])[0]
         return out
     raise ValueError(f"unknown image fmt: {fmt!r}")
+
+
+# ---------------------------------------------------------------------------
+# the flat-row image-batch reader: Arrow RecordBatch -> uniform groups
+# ---------------------------------------------------------------------------
+
+def binary_buffers(col: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(starts, ends, flat uint8 data) of a ``binary``/``large_binary``
+    array: zero-copy views of its buffers, the slice offset applied."""
+    n = len(col)
+    bufs = col.buffers()
+    if n == 0 or bufs[1] is None:
+        return np.zeros(n, np.int64), np.zeros(n, np.int64), np.zeros(0, np.uint8)
+    odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    off = np.frombuffer(bufs[1], dtype=odt)[col.offset : col.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.zeros(0, np.uint8)
+    return off[:-1], off[1:], data
+
+
+def blob_views(col: pa.Array, name: str, rows: np.ndarray) -> list[memoryview]:
+    """The blobs at ``rows`` of a binary column as memoryview slices of
+    its data buffer (no per-blob copy); NULL anywhere in the column
+    raises, naming it."""
+    if col.null_count:
+        raise ValueError(f"NULL {name!r} in image batch")
+    starts, ends, data = binary_buffers(col)
+    mv = memoryview(data)
+    return [mv[s:e] for s, e in zip(starts[rows].tolist(), ends[rows].tolist())]
+
+
+def shape_groups(batch: pa.RecordBatch, keys):
+    """Yield ``(key values, rows)`` per distinct tuple of the ``keys``
+    columns: groups in first-appearance order, ``rows`` an ascending
+    int64 index array. Grouping is numpy over the key codes (string
+    keys dictionary-encoded Arrow-side), one Python tuple per GROUP.
+    A NULL key raises, naming the column."""
+    n = batch.num_rows
+    if n == 0:
+        return
+    gid = np.zeros(n, np.int64)
+    levels, codes = [], []
+    for k in keys:
+        col = batch.column(k)
+        if col.null_count:
+            raise ValueError(f"NULL {k!r} in image batch")
+        if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+            enc = pc.dictionary_encode(col)
+            lv, cd = enc.dictionary.to_pylist(), enc.indices.to_numpy().astype(np.int64)
+        else:
+            u, cd = np.unique(col.to_numpy(), return_inverse=True)
+            lv = u.tolist()
+        levels.append(lv)
+        codes.append(cd)
+        # re-densify after each key so the mixed-radix id stays < n
+        gid = np.unique(gid * len(lv) + cd, return_inverse=True)[1]
+    _, first, inv = np.unique(gid, return_index=True, return_inverse=True)
+    order = np.argsort(inv, kind="stable")
+    bounds = np.r_[0, np.cumsum(np.bincount(inv))]
+    for g in np.argsort(first):
+        r0 = first[g]
+        yield (
+            tuple(lv[cd[r0]] for lv, cd in zip(levels, codes)),
+            order[bounds[g] : bounds[g + 1]],
+        )
+
+
+def image_groups(batch: pa.RecordBatch):
+    """The one reader for flat image rows (``bytes``, ``fmt``, ``w``,
+    ``h`` columns): yield ``(fmt, w, h, rows, pix)`` per uniform
+    group, ``pix`` the whole group decoded by ``decode_group`` from
+    memoryview slices of the Arrow data buffer. Groups come in
+    first-appearance order with ascending ``rows``; an empty batch
+    yields nothing; a NULL ``bytes``/``fmt``/``w``/``h`` raises."""
+    col = batch.column("bytes")
+    for (fmt, w, h), rows in shape_groups(batch, ("fmt", "w", "h")):
+        yield fmt, w, h, rows, decode_group(blob_views(col, "bytes", rows), fmt, w, h)
+
+
+def blobs_by_row(parts) -> pa.Array:
+    """One ``binary`` array in batch row order from per-group
+    ``(rows, blobs)`` parts that together cover every row once — the
+    write-back mirror of ``image_groups``."""
+    if not parts:
+        return pa.array([], pa.binary())
+    rows = np.concatenate([r for r, _ in parts])
+    blobs = pa.concat_arrays([pa.array(b, pa.binary()) for _, b in parts])
+    return blobs.take(pa.array(np.argsort(rows, kind="stable")))
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

@@ -551,24 +551,26 @@ def buffer_bbox_rings(flat: np.ndarray, offsets: np.ndarray, offset: float):
     expand/shrink by ``offset``. Exact for the engine's axis-aligned
     footprint quads; a degenerate (inverted) result returns the
     ORIGINAL ring with ok=False (mirrors :202-207 invalid-result
-    pass-through). Returns (flat', offsets', ok)."""
+    pass-through). Returns (flat', offsets', ok); output xy only, like
+    ``buffer_convex_rings``. One numpy pass, no per-ring loop."""
     bb = ring_bbox(flat, offsets)
-    n = len(offsets) - 1
-    out_rings, ok = [], np.zeros(n, dtype=bool)
-    for i in range(n):
-        minx, miny, maxx, maxy = bb[i]
-        if not np.isfinite(minx):
-            out_rings.append(flat[offsets[i]: offsets[i + 1]])
-            continue
-        nx0, ny0, nx1, ny1 = minx - offset, miny - offset, maxx + offset, maxy + offset
-        if nx1 <= nx0 or ny1 <= ny0:
-            out_rings.append(flat[offsets[i]: offsets[i + 1]])
-            continue
-        out_rings.append(
-            np.array([[nx0, ny0], [nx1, ny0], [nx1, ny1], [nx0, ny1]], dtype=np.float64)
-        )
-        ok[i] = True
-    return (*ragged_from_lists(out_rings), ok)
+    nx0, ny0 = bb[:, 0] - offset, bb[:, 1] - offset
+    nx1, ny1 = bb[:, 2] + offset, bb[:, 3] + offset
+    ok = np.isfinite(bb[:, 0]) & (nx1 > nx0) & (ny1 > ny0)
+    lens = np.where(ok, 4, np.diff(offsets))
+    out_off = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=out_off[1:])
+    ring = np.repeat(np.arange(len(lens)), lens)
+    local = np.arange(out_off[-1]) - out_off[:-1][ring]
+    out = np.empty((int(out_off[-1]), 2), dtype=np.float64)
+    box = ok[ring]
+    keep = ~box
+    out[keep] = flat[offsets[:-1][ring[keep]] + local[keep], :2]
+    # corners (x0,y0) (x1,y0) (x1,y1) (x0,y1): x1 at corners 1-2, y1 at 2-3
+    rb, lb = ring[box], local[box]
+    out[box, 0] = np.where((lb == 1) | (lb == 2), nx1[rb], nx0[rb])
+    out[box, 1] = np.where(lb >= 2, ny1[rb], ny0[rb])
+    return out, out_off, ok
 
 
 def buffer_convex_rings(

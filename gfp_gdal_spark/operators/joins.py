@@ -764,6 +764,7 @@ def knn_join(
 
     from gfp_gdal_spark.kernels.cells import HEX_BASE_SIZE_DEG, _hex_size, hex_res_for_size
 
+    n_q = None  # the query count, taken at most once
     if res == "auto":
         # pick the hex res so the round-1 k-ring disk holds ~2k points
         # in expectation (one cheap aggregate over the point side): too
@@ -839,7 +840,7 @@ def knn_join(
     # round-N plan recursively contains rounds 1..N-1 (the `remaining`
     # anti-join lineage) and the final union re-executes every round.
     remaining = queries
-    n_rem = queries.count()
+    n_rem = queries.count() if n_q is None else n_q
     out_cols = None
     done_parts: list[DataFrame] = []
     persisted: list[DataFrame] = [pc]

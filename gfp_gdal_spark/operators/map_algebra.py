@@ -415,8 +415,6 @@ def band_index_stats(
     Whole-batch execution: rows group by (fmt, w, h) inside each
     Arrow batch, one ``decode_group`` + one vectorized index/floor
     pass per group — no per-image Python."""
-    import collections
-
     import pyarrow as pa
 
     from gfp_gdal_spark.functions.worker_tuning import tune_worker
@@ -430,27 +428,15 @@ def band_index_stats(
     def op(batches):
         tune_worker()
         for b in batches:
-            names = b.schema.names
-            blobs = b.column(names.index(bytes_col))
-            fmts = b.column(names.index(fmt_col)).to_pylist()
-            ids = b.column(names.index(id_col))
             n = b.num_rows
             if n == 0:
                 continue
-            ws = b.column(names.index("w")).to_numpy(zero_copy_only=False)
-            hs = b.column(names.index("h")).to_numpy(zero_copy_only=False)
-            groups = collections.defaultdict(list)
-            for i in range(n):
-                groups[(fmts[i], int(ws[i]), int(hs[i]))].append(i)
             npx = np.zeros(n, dtype=np.int64)
             mean = np.zeros(n)
             mn = np.zeros(n)
             mx = np.zeros(n)
             fp = np.zeros(n)
-            for (f, w, h), idxs in groups.items():
-                pix = _codec.decode_group(
-                    [blobs[i].as_py() for i in idxs], f, w, h
-                )
+            for f, w, h, idxs, pix in _codec.image_groups(b):
                 if pix.ndim != 4:
                     raise ValueError(
                         f"band_index_stats needs multi-channel images; got {f}"
@@ -468,13 +454,15 @@ def band_index_stats(
                 mx[idxs] = uf.max(axis=1) / 1e6
                 fp[idxs] = (uf > 0).mean(axis=1)
             yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(npx), pa.array(mean), pa.array(mn),
+                [b.column(id_col), pa.array(npx), pa.array(mean), pa.array(mn),
                  pa.array(mx), pa.array(fp)],
                 names=[id_col, "n_px", "idx_mean", "idx_min", "idx_max", "frac_pos"],
             )
 
-    cols = [id_col, bytes_col, fmt_col, "w", "h"]
-    return images.select(*cols).mapInArrow(op, schema)
+    src = images.select(
+        id_col, F.col(bytes_col).alias("bytes"), F.col(fmt_col).alias("fmt"), "w", "h"
+    )
+    return src.mapInArrow(op, schema)
 
 
 def idw_grid(

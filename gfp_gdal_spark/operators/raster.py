@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -684,29 +685,21 @@ def reproject_webmercator(
     def op(batches):
         tune_worker()
         for b in batches:
-            if b.num_rows == 0:
-                continue
-            ids, blobs, groups = _codec.group_by_shape(b)
-            names = b.schema.names
-            lat_c = b.column(names.index("lat_c")).to_numpy(zero_copy_only=False)
-            dlat = b.column(names.index("dlat")).to_numpy(zero_copy_only=False)
-            out_id: list = []
-            out_w: list = []
-            out_h: list = []
-            out_b: list = []
-            out_f: list = []
-            for (f, w, h), idxs in groups.items():
+            lat_c = b.column("lat_c").to_numpy(zero_copy_only=False)
+            dlat = b.column("dlat").to_numpy(zero_copy_only=False)
+            # gate the whole batch before any decode
+            if np.any(np.abs(lat_c) + np.abs(dlat) >= 85.06):
+                raise ValueError(
+                    "footprint latitude outside WebMercator validity "
+                    "(|lat| < 85.05)"
+                )
+            rows, out_h, out_b = [], [], []
+            for f, w, h, idxs, pix in _codec.image_groups(b):
                 ho = h_out or h
                 m = len(idxs)
-                la = lat_c[idxs]
                 dl = dlat[idxs]
-                top = la + dl
-                bot = la - dl
-                if np.any(np.abs(top) >= 85.06) or np.any(np.abs(bot) >= 85.06):
-                    raise ValueError(
-                        "footprint latitude outside WebMercator validity "
-                        "(|lat| < 85.05)"
-                    )
+                top = lat_c[idxs] + dl
+                bot = lat_c[idxs] - dl
                 ytop = R * np.log(np.tan(np.pi / 4 + np.radians(top) / 2))
                 ybot = R * np.log(np.tan(np.pi / 4 + np.radians(bot) / 2))
                 j = np.arange(ho) + 0.5
@@ -717,28 +710,23 @@ def reproject_webmercator(
                     (top[:, None] - phi) / (2 * dl)[:, None] * h
                 ).astype(np.int64)
                 src = np.clip(src, 0, h - 1)
-                pix = _codec.decode_group([blobs[i].as_py() for i in idxs], f, w, h)
                 warped = pix[np.arange(m)[:, None], src]
-                enc = _codec.encode_group(np.ascontiguousarray(warped), f)
-                for t, i in enumerate(idxs):
-                    out_id.append(ids[i])
-                    out_w.append(w)
-                    out_h.append(ho)
-                    out_b.append(enc[t])
-                    out_f.append(f)
-            import pandas as pd
-
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame(
-                    {
-                        "image_id": out_id,
-                        "w": np.asarray(out_w, dtype=np.int32),
-                        "h": np.asarray(out_h, dtype=np.int32),
-                        "bytes": out_b,
-                        "fmt": out_f,
-                    }
-                ),
-                preserve_index=False,
+                rows.append(idxs)
+                out_h.append(np.full(m, ho, np.int32))
+                out_b += _codec.encode_group(np.ascontiguousarray(warped), f)
+            if not rows:
+                continue
+            # rows leave grouped, in group order; id, w and fmt carry over
+            take = pa.array(np.concatenate(rows))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("image_id").take(take),
+                    b.column("w").take(take),
+                    pa.array(np.concatenate(out_h)),
+                    pa.array(out_b, pa.binary()),
+                    b.column("fmt").take(take),
+                ],
+                ["image_id", "w", "h", "bytes", "fmt"],
             )
 
     cols = ["image_id", "bytes", "fmt", "w", "h", "lon_c", "lat_c", "dlon", "dlat"]
@@ -765,11 +753,12 @@ def sample_raster(
 
     Scale: ONE shuffle (requests groupBy image_id, map-side-combined
     collect_list) + an image_id equi-join that AQE broadcasts when
-    the probed-image set is small; decode is whole-batch per uniform
-    (fmt, w, h) group (codec.decode_group), gather is one fancy-index
-    — no per-probe Python. Probe lists are bounded per image by
-    construction (a probe set ~ the image's pixel count should use
-    raster_to_points instead).
+    the probed-image set is small; inside one mapInArrow, decode is
+    whole-batch per uniform (fmt, w, h) group (codec.image_groups) and
+    the probe lists are read off their list<struct> buffers, so the
+    gather is one fancy-index — no per-probe Python. Probe lists are
+    bounded per image by construction (a probe set ~ the image's pixel
+    count should use raster_to_points instead).
     """
     reqs = requests.groupBy("image_id").agg(
         F.collect_list(
@@ -786,51 +775,39 @@ def sample_raster(
     schema = f"{pid_col} long, image_id string, px_r int, px_c int, val double"
 
     def op(batches):
-        import pandas as pd
-
         tune_worker()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for (fmt, w, h), idx in pdf.groupby(
-                ["fmt", "w", "h"], sort=False
-            ).indices.items():
-                w, h = int(w), int(h)
-                sub = pdf.iloc[idx]
-                pix = _codec.decode_group(
-                    [bytes(b) for b in sub["bytes"]], str(fmt), w, h
-                )
+        for b in batches:
+            # the probe lists straight off the list<struct> buffers
+            reqs = b.column("_reqs")
+            counts = pc.list_value_length(reqs).to_numpy(zero_copy_only=False)
+            pids, prs, pcs = (a.to_numpy() for a in reqs.flatten().flatten())
+            first = np.cumsum(counts) - counts  # each row's first probe
+            for _fmt, w, h, rows, pix in _codec.image_groups(b):
                 ch = pix[..., band] if pix.ndim == 4 else pix
-                counts = np.array([len(r) for r in sub["_reqs"]], dtype=np.int64)
-                if counts.sum() == 0:
+                cnt = counts[rows]
+                if cnt.sum() == 0:
                     continue
-                flat = np.concatenate([np.asarray(
-                    [(q["pid"], q["r"], q["c"]) for q in r], dtype=np.int64
-                ).reshape(-1, 3) for r in sub["_reqs"] if len(r)])
-                img_ix = np.repeat(
-                    np.arange(len(sub), dtype=np.int64), counts
-                )
-                rr, cc = flat[:, 1], flat[:, 2]
-                if (rr < 0).any() or (rr >= h).any() or (cc < 0).any() or (cc >= w).any():
-                    bad = flat[(rr < 0) | (rr >= h) | (cc < 0) | (cc >= w)][0]
+                # the group's probes, row by row: k = first[row] + j
+                img_ix = np.repeat(np.arange(len(rows)), cnt)
+                j = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+                k = first[rows][img_ix] + j
+                pid, rr, cc = pids[k], prs[k], pcs[k]
+                oob = (rr < 0) | (rr >= h) | (cc < 0) | (cc >= w)
+                if oob.any():
+                    i = np.flatnonzero(oob)[0]
                     raise ValueError(
-                        f"probe out of bounds: pid={bad[0]} (r={bad[1]}, "
-                        f"c={bad[2]}) vs {h}x{w}"
+                        f"probe out of bounds: pid={pid[i]} (r={rr[i]}, "
+                        f"c={cc[i]}) vs {h}x{w}"
                     )
-                vals = ch[img_ix, rr, cc].astype(np.float64)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            pid_col: flat[:, 0],
-                            "image_id": np.asarray(sub["image_id"])[img_ix],
-                            "px_r": rr.astype(np.int32),
-                            "px_c": cc.astype(np.int32),
-                            "val": vals,
-                        }
-                    )
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(pid, pa.int64()),
+                        b.column("image_id").take(pa.array(rows[img_ix])),
+                        pa.array(rr, pa.int32()),
+                        pa.array(cc, pa.int32()),
+                        pa.array(ch[img_ix, rr, cc].astype(np.float64)),
+                    ],
+                    [pid_col, "image_id", "px_r", "px_c", "val"],
                 )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
 
-    return joined.mapInPandas(op, schema)
+    return joined.mapInArrow(op, schema)

@@ -10,7 +10,7 @@ analytics downstream of that band.
 Execution shape (the 100 TB story): every operator is per-frame
 independent — one ``mapInArrow`` pass, rows grouped by uniform
 (fmt, w, h) inside each Arrow batch, the whole group decoded into ONE
-(n, h, w) tensor (`kernels/codec.decode_group`) and processed with
+(n, h, w) tensor (`kernels/codec.image_groups`) and processed with
 whole-group vectorized numpy; no per-image Python loops, no shuffle
 at all (narrow plan — partition count scales with images, state per
 task bounded by batch x frame size). Cross-frame region stitching,
@@ -27,12 +27,12 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gfp_gdal_spark.functions.worker_tuning import tune_worker
 from gfp_gdal_spark.kernels import codec as _codec
-from gfp_gdal_spark.kernels.codec import group_by_shape
 
 __all__ = [
     "label_regions",
@@ -48,16 +48,37 @@ __all__ = [
 _BIG = np.int64(1) << np.int64(62)
 
 
-def _gray_group(blobs: list[bytes], fmt: str, w: int, h: int) -> np.ndarray:
-    """Decode a uniform group to a single-band (n, h, w) int64 tensor
-    (color inputs use the round-half-up BT.601 luma already used by
-    the ahash kernel, so 'value' is well-defined for every fmt)."""
-    pix = _codec.decode_group(blobs, fmt, w, h)
-    if pix.ndim == 4:
-        p = pix.astype(np.int64)
-        # BT.601 integer luma, round-half-up — matches kernels/codec.ahash
-        pix = (299 * p[..., 0] + 587 * p[..., 1] + 114 * p[..., 2] + 500) // 1000
-    return pix.astype(np.int64)
+def _gray_group(pix: np.ndarray) -> np.ndarray:
+    """A decoded (n, h, w[, 3]) group as a single-band (n, h, w) int64
+    tensor (color inputs use the round-half-up BT.601 luma already
+    used by the ahash kernel, so 'value' is well-defined for every
+    fmt)."""
+    p = pix.astype(np.int64)
+    if p.ndim == 4:
+        p = (299 * p[..., 0] + 587 * p[..., 1] + 114 * p[..., 2] + 500) // 1000
+    return p
+
+
+def _gray_batch(b: pa.RecordBatch, parts) -> pa.RecordBatch:
+    """The (image_id, w, h, bytes, fmt) batch of a gray repaint op:
+    ``parts`` are per-group ``(rows, fmt, values)``, values clipped to
+    uint8 and encoded whole-group (ppm collapses to its one-band pgm);
+    ids and dims pass through as ``b``'s own arrays."""
+    blobs = []
+    for rows, f, v in parts:
+        painted = np.clip(v, 0, 255).astype(np.uint8)
+        blobs.append((rows, _codec.encode_group(painted, "pgm" if f == "ppm" else f)))
+    fmt = b.column("fmt")
+    return pa.RecordBatch.from_arrays(
+        [
+            b.column("image_id"),
+            b.column("w"),
+            b.column("h"),
+            _codec.blobs_by_row(blobs),
+            pc.if_else(pc.equal(fmt, "ppm"), "pgm", fmt),
+        ],
+        ["image_id", "w", "h", "bytes", "fmt"],
+    )
 
 
 def _label_group(pix: np.ndarray, connectivity: int) -> np.ndarray:
@@ -152,24 +173,18 @@ def label_regions(
     def op(batches):
         tune_worker()
         for b in batches:
-            ids, blobs, groups = group_by_shape(b)
-            for (f, w, h), idxs in groups.items():
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
+            ids = b.column("image_id")
+            for f, w, h, idxs, pix in _codec.image_groups(b):
+                pix = _gray_group(pix)
                 lab = _label_group(pix, connectivity)
                 frame, region, val, cnt, r0, c0, r1, c1 = _region_rows(pix, lab)
                 if nodata is not None:
                     keep = val != nodata
                     frame, region, val, cnt = frame[keep], region[keep], val[keep], cnt[keep]
                     r0, c0, r1, c1 = r0[keep], c0[keep], r1[keep], c1[keep]
-                if frame.size == 0:
-                    # all-nodata group: an empty object take would make
-                    # pa.array infer type NULL and break the declared
-                    # string schema (contour_segments has the same guard)
-                    continue
-                id_arr = np.asarray([ids[i] for i in idxs], dtype=object)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(id_arr[frame]),
+                        ids.take(pa.array(idxs[frame])),
                         pa.array(region, pa.int64()),
                         pa.array(val, pa.int64()),
                         pa.array(cnt, pa.int64()),
@@ -203,9 +218,9 @@ def region_borders(
     def op(batches):
         tune_worker()
         for b in batches:
-            ids, blobs, groups = group_by_shape(b)
-            for (f, w, h), idxs in groups.items():
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
+            ids = b.column("image_id")
+            for f, w, h, idxs, pix in _codec.image_groups(b):
+                pix = _gray_group(pix)
                 lab = _label_group(pix, connectivity)
                 m = pix.shape[0]
                 frames, sides, poss, regs, vals = [], [], [], [], []
@@ -231,10 +246,9 @@ def region_borders(
                 fr = np.concatenate(frames)
                 if fr.size == 0:
                     continue
-                id_arr = np.asarray([ids[i] for i in idxs], dtype=object)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(id_arr[fr]),
+                        ids.take(pa.array(idxs[fr])),
                         pa.array(np.concatenate(sides)),
                         pa.array(np.concatenate(poss).astype(np.int32)),
                         pa.array(np.concatenate(regs), pa.int64()),
@@ -270,11 +284,10 @@ def _labels_and_borders(
     def op(batches):
         tune_worker()
         for b in batches:
-            ids, blobs, groups = group_by_shape(b)
-            for (f, w, h), idxs in groups.items():
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
+            ids = b.column("image_id")
+            for f, w, h, idxs, pix in _codec.image_groups(b):
+                pix = _gray_group(pix)
                 lab = _label_group(pix, connectivity)
-                id_arr = np.asarray([ids[i] for i in idxs], dtype=object)
                 # region rows (label_regions twin)
                 frame, region, val, cnt, r0, c0, r1, c1 = _region_rows(pix, lab)
                 if nodata is not None:
@@ -285,7 +298,7 @@ def _labels_and_borders(
                     npos = pa.nulls(frame.size, pa.int32())
                     yield pa.RecordBatch.from_arrays(
                         [
-                            pa.array(id_arr[frame]),
+                            ids.take(pa.array(idxs[frame])),
                             pa.array(np.full(frame.size, "G", dtype=object)),
                             pa.array(region, pa.int64()),
                             pa.array(val, pa.int64()),
@@ -325,7 +338,7 @@ def _labels_and_borders(
                     nn = fr.size
                     yield pa.RecordBatch.from_arrays(
                         [
-                            pa.array(id_arr[fr]),
+                            ids.take(pa.array(idxs[fr])),
                             pa.array(np.concatenate(sides)),
                             pa.array(np.concatenate(regs), pa.int64()),
                             pa.array(np.concatenate(vals), pa.int64()),
@@ -564,13 +577,12 @@ def proximity_raster(
     def op(batches):
         tune_worker()
         for b in batches:
-            ids, blobs, groups = group_by_shape(b)
-            for (f, w, h), idxs in groups.items():
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
+            ids = b.column("image_id")
+            for f, w, h, idxs, pix in _codec.image_groups(b):
+                pix = _gray_group(pix)
                 mask = np.isin(pix, tset)
                 d2, nr, nc = _proximity_group(pix, mask)
                 m = len(idxs)
-                id_arr = np.asarray([ids[i] for i in idxs], dtype=object)
                 fid = np.repeat(np.arange(m), h * w)
                 rr = np.broadcast_to(
                     np.arange(h, dtype=np.int32).reshape(1, h, 1), (m, h, w)
@@ -580,7 +592,7 @@ def proximity_raster(
                 ).reshape(-1)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(id_arr[fid]),
+                        ids.take(pa.array(idxs[fid])),
                         pa.array(rr, pa.int32()),
                         pa.array(cc, pa.int32()),
                         pa.array(d2.reshape(-1), pa.int64()),
@@ -706,17 +718,16 @@ def contour_segments(
     def op(batches):
         tune_worker()
         for b in batches:
-            ids, blobs, groups = group_by_shape(b)
-            for (f, w, h), idxs in groups.items():
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
-                id_arr = np.asarray([ids[i] for i in idxs], dtype=object)
+            ids = b.column("image_id")
+            for f, w, h, idxs, pix in _codec.image_groups(b):
+                pix = _gray_group(pix)
                 for v in lv:
                     fidx, x0, y0, x1, y1 = _contour_group(pix, v)
                     if fidx.size == 0:
                         continue
                     yield pa.RecordBatch.from_arrays(
                         [
-                            pa.array(id_arr[fidx]),
+                            ids.take(pa.array(idxs[fidx])),
                             pa.array(np.full(fidx.size, v), pa.float64()),
                             pa.array(x0, pa.float64()),
                             pa.array(y0, pa.float64()),
@@ -754,17 +765,11 @@ def sieve_filter(
     schema = "image_id string, w int, h int, bytes binary, fmt string"
 
     def op(batches):
-        import pandas as pd
-
         tune_worker()
         for b in batches:
-            if b.num_rows == 0:
-                continue
-            n = b.num_rows
-            ids, blobs, groups, fmts, ws, hs = group_by_shape(b, with_dims=True)
-            out_b: list = [None] * n
-            for (f, w, h), idxs in groups.items():
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
+            parts = []
+            for f, w, h, idxs, pix in _codec.image_groups(b):
+                pix = _gray_group(pix)
                 lab = _label_group(pix, connectivity)
                 m = pix.shape[0]
                 hw = h * w
@@ -792,22 +797,8 @@ def sieve_filter(
                     small = sizes[src_s[first]] < min_pixels
                     remap[src_s[first[small]]] = nbr_s[first[small]]
                 vals = pix.reshape(-1)[remap[glab.reshape(-1)]]
-                painted = np.clip(vals, 0, 255).astype(np.uint8).reshape(m, h, w)
-                enc = _codec.encode_group(painted, "pgm" if f == "ppm" else f)
-                for t, i in enumerate(idxs):
-                    out_b[i] = enc[t]
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame(
-                    {
-                        "image_id": ids,
-                        "w": ws.astype(np.int32),
-                        "h": hs.astype(np.int32),
-                        "bytes": out_b,
-                        "fmt": [("pgm" if x == "ppm" else x) for x in fmts],
-                    }
-                ),
-                preserve_index=False,
-            )
+                parts.append((idxs, f, vals.reshape(m, h, w)))
+            yield _gray_batch(b, parts)
 
     cols = ["image_id", "bytes", "fmt", "w", "h"]
     return images.select(*cols).mapInArrow(op, schema)
@@ -831,17 +822,11 @@ def fill_nodata(
     schema = "image_id string, w int, h int, bytes binary, fmt string"
 
     def op(batches):
-        import pandas as pd
-
         tune_worker()
         for b in batches:
-            if b.num_rows == 0:
-                continue
-            n = b.num_rows
-            ids, blobs, groups, fmts, ws, hs = group_by_shape(b, with_dims=True)
-            out_b: list = [None] * n
-            for (f, w, h), idxs in groups.items():
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
+            parts = []
+            for f, w, h, idxs, pix in _codec.image_groups(b):
+                pix = _gray_group(pix)
                 mask = pix != nodata
                 _, nr, nc = _proximity_group(pix, mask)
                 m = pix.shape[0]
@@ -854,22 +839,8 @@ def fill_nodata(
                     pix[fgrid, np.where(valid, nr, 0), np.where(valid, nc, 0)],
                     pix,
                 )
-                painted = np.clip(filled, 0, 255).astype(np.uint8)
-                enc = _codec.encode_group(painted, "pgm" if f == "ppm" else f)
-                for t, i in enumerate(idxs):
-                    out_b[i] = enc[t]
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame(
-                    {
-                        "image_id": ids,
-                        "w": ws.astype(np.int32),
-                        "h": hs.astype(np.int32),
-                        "bytes": out_b,
-                        "fmt": [("pgm" if x == "ppm" else x) for x in fmts],
-                    }
-                ),
-                preserve_index=False,
-            )
+                parts.append((idxs, f, filled))
+            yield _gray_batch(b, parts)
 
     cols = ["image_id", "bytes", "fmt", "w", "h"]
     return images.select(*cols).mapInArrow(op, schema)
@@ -983,19 +954,18 @@ def viewshed(
     def op(batches):
         tune_worker()
         for b in batches:
-            ids, blobs, groups = group_by_shape(b)
-            for (f, w, h), idxs in groups.items():
+            ids = b.column("image_id")
+            for f, w, h, idxs, pix in _codec.image_groups(b):
                 if observer_r >= h or observer_c >= w:
                     raise ValueError(
                         f"observer ({observer_r}, {observer_c}) outside "
                         f"{h}x{w} frame (K9: no silent clamping)"
                     )
-                pix = _gray_group([blobs[i].as_py() for i in idxs], f, w, h)
+                pix = _gray_group(pix)
                 vis, _ = _viewshed_group(
                     pix, observer_r, observer_c, observer_height, target_height
                 )
                 m = len(idxs)
-                id_arr = np.asarray([ids[i] for i in idxs], dtype=object)
                 fid = np.repeat(np.arange(m), h * w)
                 rr = np.broadcast_to(
                     np.arange(h, dtype=np.int32).reshape(1, h, 1), (m, h, w)
@@ -1005,7 +975,7 @@ def viewshed(
                 ).reshape(-1)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(id_arr[fid]),
+                        ids.take(pa.array(idxs[fid])),
                         pa.array(rr, pa.int32()),
                         pa.array(cc, pa.int32()),
                         pa.array(pix.reshape(-1), pa.int64()),

@@ -15,6 +15,7 @@ pure function DataFrame -> DataFrame plus a bucketed runner.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,22 +38,21 @@ def decode_and_hash(images: DataFrame) -> DataFrame:
     perceptual average-hash and the round-trip PSNR>=40dB invariant
     flag (BASELINE.json input_hint).
 
-    Round-4 shape: whole-batch decode AND re-encode per uniform
-    (fmt,w,h) group (kernels.codec.decode_group / encode_group — one
-    numpy pass per group for fixed-layout formats, per-blob zlib only
-    where the stream forces it, C-level and GIL-releasing) and
-    vectorized hash/stats over the group tensor. No per-image Python
-    loop anywhere in the ingest boundary."""
-    from gfp_gdal_spark.operators.multimodal import _grouped
+    Per Arrow batch, each uniform (fmt, w, h) group is decoded and
+    re-encoded whole (kernels.codec.image_groups / encode_group) and
+    hashed and measured by vectorized reductions over the group
+    tensor; the carried columns pass through as the batch's own Arrow
+    arrays."""
+    keep = ["image_id", "w", "h", "fmt", "caption", "phash"]
 
     def op(batches):
         tune_worker()
-        for pdf in batches:
-            n = len(pdf)
+        for b in batches:
+            n = b.num_rows
             ah = np.zeros(n, dtype=np.int64)
             mp = np.zeros(n)
             ok = np.zeros(n, dtype=bool)
-            for fmt, w, h, idx, pix in _grouped(pdf):
+            for fmt, w, h, idx, pix in _codec.image_groups(b):
                 ng = pix.shape[0]
                 g = (
                     pix.astype(np.float64).mean(axis=3)
@@ -67,13 +67,12 @@ def decode_and_hash(images: DataFrame) -> DataFrame:
                 ).reshape(ng, -1).mean(axis=1)
                 with np.errstate(divide="ignore"):
                     ok[idx] = 10.0 * np.log10(255.0**2 / np.maximum(mse, 1e-300)) >= 40.0
-            out = pdf[["image_id", "w", "h", "fmt", "caption", "phash"]].copy()
-            out["ahash"] = ah
-            out["mean_px"] = mp
-            out["psnr_ok"] = ok
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [b.column(c) for c in keep] + [pa.array(ah), pa.array(mp), pa.array(ok)],
+                names=keep + ["ahash", "mean_px", "psnr_ok"],
+            )
 
-    return images.mapInPandas(op, _DEC_SCHEMA)
+    return images.select(*keep, "bytes").mapInArrow(op, _DEC_SCHEMA)
 
 
 def north_star_pipeline(

@@ -156,6 +156,22 @@ def test_buffer_bbox():
     assert G.ragged_to_arrow(nf2, no2).to_pylist()[0] == SQUARE
 
 
+def test_buffer_bbox_xyz_mixed_pass_through():
+    """An xyz batch where one ring boxes and one inverts: both come out
+    xy (the pass-through drops z like the boxes do), no mixed-width
+    error."""
+    small = [[0.0, 0.0, 5.0], [1.0, 0.0, 5.0], [1.0, 1.0, 5.0], [0.0, 1.0, 5.0]]
+    big = [[0.0, 0.0, 7.0], [3.0, 0.0, 7.0], [3.0, 3.0, 7.0], [0.0, 3.0, 7.0]]
+    flat, off = ragged([small, big])
+    nf, no, ok = G.buffer_bbox_rings(flat, off, -0.6)
+    assert ok.tolist() == [False, True]
+    assert nf.shape[1] == 2
+    assert G.ragged_to_arrow(nf, no).to_pylist() == [
+        [p[:2] for p in small],
+        [[0.6, 0.6], [2.4, 0.6], [2.4, 2.4], [0.6, 2.4]],
+    ]
+
+
 def test_wkt():
     flat, off = ragged([SQUARE, []])
     w = G.rings_to_wkt(flat, off)

@@ -6,7 +6,8 @@ against `.explain` output rather than taken on faith.
 - tile_assign stays entirely JVM-side (no Python eval node);
 - pip_join(broadcast=True) plans a BroadcastHashJoin;
 - pip_join(broadcast=False) plans a shuffle join (no broadcast);
-- every ring, holes and triangle function plans as a scalar Arrow UDF.
+- every ring, holes and triangle function plans as a scalar Arrow UDF;
+- every flat-row image operator plans a MapInArrow, never a MapInPandas.
 """
 
 import re
@@ -256,3 +257,35 @@ def test_ring_functions_plan_scalar_arrow_udf(spark):
     for c in cols:
         plan = plan_of(df.select(c))
         assert re.findall(r"ArrowEvalPython \[.*\], \[.*\], (\d+)", plan) == ["250"], plan
+
+
+def test_image_ops_plan_map_in_arrow(spark):
+    """Every flat-row image operator reads its batches through the one
+    Arrow image reader (codec.image_groups): each plans a MapInArrow
+    node and no MapInPandas."""
+    from gfp_gdal_spark import pipelines as P
+    from gfp_gdal_spark.operators import multimodal as MM
+    from gfp_gdal_spark.operators.raster import sample_raster
+
+    images = spark.createDataFrame(
+        [],
+        "image_id string, bytes binary, w int, h int, fmt string, caption string, "
+        "phash long, aug_op string",
+    )
+    probes = spark.createDataFrame([], "pid long, image_id string, px_r int, px_c int")
+    ops = {
+        "decode_and_hash": P.decode_and_hash(images),
+        "image_stats": MM.image_stats(images),
+        "reencode_images": MM.reencode_images(images, "png"),
+        "resize_images": MM.resize_images(images, 4, 4),
+        "crop_images": MM.crop_images(images, 0, 0, 2, 2),
+        "rescale_images": MM.rescale_images(images),
+        "augment_images": MM.augment_images(images),
+        "image_histogram": MM.image_histogram(images),
+        "equalize_images": MM.equalize_images(images),
+        "verify_pairs": MM.verify_pairs(images, images),
+        "sample_raster": sample_raster(probes, images),
+    }
+    for name, df in ops.items():
+        plan = plan_of(df)
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, f"{name}:\n{plan}"

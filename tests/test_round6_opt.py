@@ -117,3 +117,51 @@ def test_knn_small_query_shortcut_matches_ring_path(spark):  # noqa: F811
         for r in knn_join(q, pts, k=4, res=6, kring=2).collect()
     }
     assert fast == slow and len(fast) == 8 * 4
+
+
+def test_knn_join_counts_query_side_once(spark, monkeypatch):  # noqa: F811
+    """Above the brute-force budget (|queries| x |points| > 2e8) the
+    auto+exact path counts the query side once: the shortcut's count
+    is reused as the ring rounds' starting remainder. Rows match the
+    explicit-res ring path (both exact)."""
+    from gfp_gdal_spark.operators.joins import knn_join
+
+    rng = np.random.default_rng(5)
+    n = 14_500  # n * n just over the 2e8 candidate budget
+    pts = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "point_id": range(n),
+                "lon_c": rng.uniform(10, 12, n),
+                "lat_c": rng.uniform(40, 42, n),
+            }
+        )
+    )
+    q = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "query_id": range(n),
+                "q_lon": rng.uniform(10, 12, n),
+                "q_lat": rng.uniform(40, 42, n),
+            }
+        )
+    )
+    calls = []
+    cls = type(q)  # the concrete (classic) DataFrame class
+    real_count = cls.count
+
+    def count(self):
+        calls.append(self is q)
+        return real_count(self)
+
+    monkeypatch.setattr(cls, "count", count)
+    auto = {
+        (r["query_id"], r["point_id"], r["rank"])
+        for r in knn_join(q, pts, k=2, res="auto", kring=2).collect()
+    }
+    assert sum(calls) == 1, calls
+    ring = {
+        (r["query_id"], r["point_id"], r["rank"])
+        for r in knn_join(q, pts, k=2, res=4, kring=2).collect()
+    }
+    assert auto == ring and len(auto) == n * 2
