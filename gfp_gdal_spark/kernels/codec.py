@@ -4,10 +4,17 @@ The engine's analog of the reference's raster IO boundary
 (GDALReader/GDALWriter, gdal_nodes.cpp:274-342,344-424): images live
 in DataFrames as an opaque ``bytes`` binary column plus typed metadata
 (w, h, fmt) — exactly the BASELINE.json input_hint schema. Every
-flat-row image operator reads its Arrow batches through one reader
-here (``image_groups``: rows grouped by uniform (fmt, w, h), each
-group decoded whole from slices of the binary column's data buffer),
-and writes back with the group encoders.
+media operator reads its Arrow batches through one reader here:
+``shape_groups`` groups the rows of a batch by uniform key columns,
+``blob_views`` hands a group's blobs to a group decoder as slices of
+the binary column's data buffer, ``image_keys`` groups image rows
+(``bytes``, ``fmt``, ``w``, ``h``) by (fmt, w, h) and the channel
+count read off each blob's header, and ``image_groups`` decodes each
+such group whole. The same reader serves flat image rows, the child
+rows flattened out of a ``collect_list<struct>`` column (tile pyramid,
+mosaic) and audio clips keyed by (n_samples, n_channels,
+sample_rate). Writes go back through the group encoders and
+``blobs_by_row``.
 
 Formats:
 - ``ppm``  — binary P6 RGB, lossless.
@@ -58,8 +65,9 @@ def _encode_pnm(pix: np.ndarray) -> bytes:
     return header + np.ascontiguousarray(pix, dtype=np.uint8).tobytes()
 
 
-def _decode_pnm(data: bytes) -> np.ndarray:
-    # header: magic, whitespace-separated w h maxval, single whitespace, raster
+def _pnm_header(data: bytes) -> tuple[int, int, int]:
+    """(w, h, raster offset) of a P5/P6 blob: magic, whitespace-separated
+    w h maxval (``#`` comments allowed), one whitespace, raster."""
     fields: list[bytes] = []
     i = 2  # past magic
     while len(fields) < 3:
@@ -70,12 +78,17 @@ def _decode_pnm(data: bytes) -> np.ndarray:
                 i += 1
             continue
         j = i
-        while not data[j : j + 1].isspace():
+        while j < len(data) and not data[j : j + 1].isspace():
             j += 1
+        if j == i:
+            raise ValueError("truncated pnm header")
         fields.append(data[i:j])
         i = j
-    i += 1  # the single whitespace after maxval
-    w, h = int(fields[0]), int(fields[1])
+    return int(fields[0]), int(fields[1]), i + 1  # + the whitespace after maxval
+
+
+def _decode_pnm(data: bytes) -> np.ndarray:
+    w, h, i = _pnm_header(data)
     raster = np.frombuffer(data, dtype=np.uint8, offset=i)
     if data[:2] == b"P5":
         return raster[: w * h].reshape(h, w)
@@ -435,7 +448,7 @@ def blob_views(col: pa.Array, name: str, rows: np.ndarray) -> list[memoryview]:
     its data buffer (no per-blob copy); NULL anywhere in the column
     raises, naming it."""
     if col.null_count:
-        raise ValueError(f"NULL {name!r} in image batch")
+        raise ValueError(f"NULL {name!r} in batch")
     starts, ends, data = binary_buffers(col)
     mv = memoryview(data)
     return [mv[s:e] for s, e in zip(starts[rows].tolist(), ends[rows].tolist())]
@@ -455,7 +468,7 @@ def shape_groups(batch: pa.RecordBatch, keys):
     for k in keys:
         col = batch.column(k)
         if col.null_count:
-            raise ValueError(f"NULL {k!r} in image batch")
+            raise ValueError(f"NULL {k!r} in batch")
         if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
             enc = pc.dictionary_encode(col)
             lv, cd = enc.dictionary.to_pylist(), enc.indices.to_numpy().astype(np.int64)
@@ -477,15 +490,78 @@ def shape_groups(batch: pa.RecordBatch, keys):
         )
 
 
-def image_groups(batch: pa.RecordBatch):
-    """The one reader for flat image rows (``bytes``, ``fmt``, ``w``,
-    ``h`` columns): yield ``(fmt, w, h, rows, pix)`` per uniform
-    group, ``pix`` the whole group decoded by ``decode_group`` from
-    memoryview slices of the Arrow data buffer. Groups come in
-    first-appearance order with ascending ``rows``; an empty batch
-    yields nothing; a NULL ``bytes``/``fmt``/``w``/``h`` raises."""
+_MAGIC = {"ppm": b"P6", "pgm": b"P5", "png": _PNG_SIG, "qnt": b"QNT1"}
+_HEAD = {"ppm": 2, "pgm": 2, "png": 26, "qnt": 13}  # header bytes read below
+
+
+def _u32(data: np.ndarray, at: np.ndarray) -> np.ndarray:
+    """Big-endian uint32 at each offset ``at`` of ``data``."""
+    return (data[at[:, None] + np.arange(4)].astype(np.int64) << np.array([24, 16, 8, 0])).sum(axis=1)
+
+
+def _headers(data: np.ndarray, starts: np.ndarray, ends: np.ndarray, fmt: str, w: int, h: int):
+    """Per-blob (w, h, channel count) of a one-``fmt`` group, read off
+    the headers in the data buffer: the png IHDR width, height (bytes
+    16-23) and colour type (25, 0 = gray); the qnt w, h (4-11) and
+    channel byte (12); ppm/pgm by one compare against the canonical
+    ``P6\\n<w> <h>\\n255\\n`` header, parsing only the blobs that differ
+    (comments, other whitespace). A blob shorter than its header,
+    without the format's magic, or (ppm/pgm) whose length is not its
+    header's plus the raster's raises."""
+    if fmt not in _MAGIC:
+        raise ValueError(f"unknown image fmt: {fmt!r}")
+    if (ends - starts < _HEAD[fmt]).any():
+        raise ValueError(f"truncated 'bytes' blob in a {fmt!r} group")
+    magic = np.frombuffer(_MAGIC[fmt], np.uint8)
+    if (data[starts[:, None] + np.arange(len(magic))] != magic).any():
+        raise ValueError(f"'bytes' blob is not {fmt!r}")
+    if fmt == "png":
+        return _u32(data, starts + 16), _u32(data, starts + 20), np.where(data[starts + 25] == 0, 1, 3)
+    if fmt == "qnt":
+        return _u32(data, starts + 4), _u32(data, starts + 8), data[starts + 12].astype(np.int64)
+    nch = 3 if fmt == "ppm" else 1
+    hdr = np.frombuffer(b"%s\n%d %d\n255\n" % (_MAGIC[fmt], w, h), np.uint8)
+    hw, hh = np.full(len(starts), w), np.full(len(starts), h)
+    ok = ends - starts == len(hdr) + w * h * nch
+    ok[ok] = (data[starts[ok][:, None] + np.arange(len(hdr))] == hdr).all(axis=1)
+    for i in np.flatnonzero(~ok):
+        blob = data[starts[i] : ends[i]].tobytes()
+        hw[i], hh[i], off = _pnm_header(blob)
+        if len(blob) != off + hw[i] * hh[i] * nch:
+            raise ValueError(f"'bytes' blob is {len(blob)} bytes but its {fmt!r} header says {off + hw[i] * hh[i] * nch}")
+    return hw, hh, np.full(len(starts), nch)
+
+
+def image_keys(batch: pa.RecordBatch):
+    """Yield ``(fmt, w, h, rows)`` per uniform (fmt, w, h, channel
+    count) group of image rows (``bytes``, ``fmt``, ``w``, ``h``
+    columns), the channel count read off each blob's header, so gray
+    and RGB blobs of one (fmt, w, h) fall in separate groups. Groups
+    come in first-appearance order of (fmt, w, h), then of the channel
+    count, with ascending ``rows``; an empty batch yields nothing. A
+    NULL ``bytes``/``fmt``/``w``/``h``, a truncated blob or one whose
+    header dims differ from its ``w``/``h`` raises."""
     col = batch.column("bytes")
+    if col.null_count:
+        raise ValueError("NULL 'bytes' in batch")
+    starts, ends, data = binary_buffers(col)
     for (fmt, w, h), rows in shape_groups(batch, ("fmt", "w", "h")):
+        hw, hh, nch = _headers(data, starts[rows], ends[rows], fmt, w, h)
+        bad = np.flatnonzero((hw != w) | (hh != h))
+        if bad.size:
+            i = bad[0]
+            raise ValueError(f"'bytes' header is {hw[i]}x{hh[i]} but the w/h columns say {w}x{h}")
+        _, first = np.unique(nch, return_index=True)
+        for c in nch[np.sort(first)]:
+            yield fmt, w, h, rows[nch == c]
+
+
+def image_groups(batch: pa.RecordBatch):
+    """The one reader for image rows: yield ``(fmt, w, h, rows, pix)``
+    per ``image_keys`` group, ``pix`` the whole group decoded by
+    ``decode_group`` from memoryview slices of the Arrow data buffer."""
+    col = batch.column("bytes")
+    for fmt, w, h, rows in image_keys(batch):
         yield fmt, w, h, rows, decode_group(blob_views(col, "bytes", rows), fmt, w, h)
 
 

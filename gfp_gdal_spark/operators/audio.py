@@ -3,19 +3,22 @@ the audio leg of the multimodal boundary (images: operators.multimodal;
 video: injectable-stub plumbing; audio is REAL end-to-end because PCM
 WAV needs no external codec — kernels/wavcodec.py).
 
-Scale shape mirrors the image pipeline's round-3/4 lessons: rows group
-by uniform (n_samples, n_channels) inside each Arrow batch and decode
-whole-batch (one frombuffer+reshape per group for engine-encoded
-blobs); every per-sample computation is a vectorized numpy pass over
-the group tensor — no per-row Python anywhere.
+Every op is one mapInArrow pass on the media reader of
+kernels/codec.py: ``shape_groups`` groups the rows of each Arrow batch
+by uniform (n_samples, n_channels, sample_rate), ``blob_views`` hands
+each group's clips to ``wavcodec.decode_wav_group`` as slices of the
+binary column's data buffer, and every per-sample computation is a
+vectorized numpy pass over the group tensor — no per-row Python
+anywhere. Passed-through columns stay the batch's own Arrow arrays.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from gfp_gdal_spark.kernels import codec as C
 from gfp_gdal_spark.kernels import wavcodec as W
 
 __all__ = [
@@ -31,21 +34,17 @@ _STATS_SCHEMA = (
 )
 
 
-def _grouped(pdf: pd.DataFrame):
-    """Yield (n_samples, ch, rate, idx, tensor) per uniform group.
+def _clip_groups(b: pa.RecordBatch):
+    """Yield (n_samples, ch, rate, rows, tensor) per uniform group.
 
     sample_rate is part of the group key: every consumer below applies
     ONE rate to the whole group (resample's source rate, stats'
     duration), so two clips with equal (n_samples, n_channels) but
     different rates must never share a group — 1s@8kHz and 2s@4kHz
     would otherwise silently resample with the wrong source rate."""
-    for (ns, ch, rate), idx in pdf.groupby(
-        ["n_samples", "n_channels", "sample_rate"], sort=False
-    ).indices.items():
-        blobs = [bytes(b) for b in pdf["bytes"].iloc[idx]]
-        yield int(ns), int(ch), int(rate), idx, W.decode_wav_group(
-            blobs, int(ns), int(ch)
-        )
+    col = b.column("bytes")
+    for (ns, ch, rate), rows in C.shape_groups(b, ("n_samples", "n_channels", "sample_rate")):
+        yield ns, ch, rate, rows, W.decode_wav_group(C.blob_views(col, "bytes", rows), ns, ch)
 
 
 def audio_stats(audios: DataFrame) -> DataFrame:
@@ -55,13 +54,13 @@ def audio_stats(audios: DataFrame) -> DataFrame:
     the audio twin of the image PSNR>=40 gate)."""
 
     def op(batches):
-        for pdf in batches:
-            n = len(pdf)
+        for b in batches:
+            n = b.num_rows
             peak = np.zeros(n, dtype=np.int32)
             rms = np.zeros(n)
             zc = np.zeros(n, dtype=np.int64)
             ok = np.zeros(n, dtype=bool)
-            for ns, ch, rate, idx, s in _grouped(pdf):
+            for ns, ch, rate, idx, s in _clip_groups(b):
                 x = s.astype(np.float64)
                 peak[idx] = np.abs(s).max(axis=(1, 2))
                 rms[idx] = np.sqrt((x**2).mean(axis=(1, 2)))
@@ -70,17 +69,18 @@ def audio_stats(audios: DataFrame) -> DataFrame:
                 zc[idx] = (np.diff(c0, axis=1) != 0).sum(axis=1)
                 rt = W.decode_wav_group(W.encode_wav_group(s, rate), ns, ch)
                 ok[idx] = (rt == s).all(axis=(1, 2))
-            out = pdf[
-                ["audio_id", "n_samples", "sample_rate", "n_channels"]
-            ].copy()
-            out["duration_s"] = pdf["n_samples"] / pdf["sample_rate"]
-            out["peak"] = peak
-            out["rms"] = rms
-            out["zero_crossings"] = zc
-            out["roundtrip_ok"] = ok
-            yield out
+            ns, rate, ch = (
+                b.column(c).cast(pa.int32()) for c in ("n_samples", "sample_rate", "n_channels")
+            )
+            yield pa.RecordBatch.from_arrays(
+                [b.column("audio_id"), ns, rate, ch,
+                 pa.array(ns.to_numpy(zero_copy_only=False) / rate.to_numpy(zero_copy_only=False)),
+                 pa.array(peak), pa.array(rms), pa.array(zc), pa.array(ok)],
+                ["audio_id", "n_samples", "sample_rate", "n_channels", "duration_s",
+                 "peak", "rms", "zero_crossings", "roundtrip_ok"],
+            )
 
-    return audios.mapInPandas(op, _STATS_SCHEMA)
+    return audios.mapInArrow(op, _STATS_SCHEMA)
 
 
 def resample_audio(audios: DataFrame, out_rate: int) -> DataFrame:
@@ -89,10 +89,10 @@ def resample_audio(audios: DataFrame, out_rate: int) -> DataFrame:
     interpolation index array per uniform group."""
 
     def op(batches):
-        for pdf in batches:
-            blobs: list[bytes | None] = [None] * len(pdf)
-            nsamp = np.zeros(len(pdf), dtype=np.int32)
-            for ns, ch, rate, idx, s in _grouped(pdf):
+        for b in batches:
+            parts = []
+            nsamp = np.zeros(b.num_rows, dtype=np.int32)
+            for ns, ch, rate, idx, s in _clip_groups(b):
                 m = max(int(round(ns * out_rate / rate)), 1)
                 pos = np.minimum(np.arange(m) * rate / out_rate, ns - 1)
                 i0 = np.floor(pos).astype(np.int64)
@@ -102,17 +102,19 @@ def resample_audio(audios: DataFrame, out_rate: int) -> DataFrame:
                 res = np.round(
                     x[:, i0] * (1.0 - frac) + x[:, i1] * frac
                 ).astype(np.int16)
-                enc = W.encode_wav_group(res, out_rate)
-                for j, i in enumerate(idx):
-                    blobs[i] = enc[j]
+                parts.append((idx, W.encode_wav_group(res, out_rate)))
                 nsamp[idx] = m
-            out = pdf.copy()
-            out["bytes"] = blobs
-            out["n_samples"] = nsamp
-            out["sample_rate"] = np.int32(out_rate)
-            yield out
+            new = {
+                "bytes": C.blobs_by_row(parts),
+                "n_samples": pa.array(nsamp),
+                "sample_rate": pa.array(np.full(b.num_rows, out_rate, np.int32)),
+            }
+            yield pa.RecordBatch.from_arrays(
+                [new[f.name].cast(f.type) if f.name in new else b.column(f.name) for f in b.schema],
+                b.schema.names,
+            )
 
-    return audios.mapInPandas(op, audios.schema)
+    return audios.mapInArrow(op, audios.schema)
 
 
 def audio_fingerprint(audios: DataFrame, n_bands: int = 16, frame: int = 1024) -> DataFrame:
@@ -126,9 +128,9 @@ def audio_fingerprint(audios: DataFrame, n_bands: int = 16, frame: int = 1024) -
     ahash."""
 
     def op(batches):
-        for pdf in batches:
-            fps = np.zeros(len(pdf), dtype=np.int64)
-            for ns, ch, _rate, idx, s in _grouped(pdf):
+        for b in batches:
+            fps = np.zeros(b.num_rows, dtype=np.int64)
+            for ns, ch, _rate, idx, s in _clip_groups(b):
                 # clips shorter than `frame` analyze as one whole-clip
                 # frame (zero-length reshape would raise otherwise)
                 fr = min(frame, ns)
@@ -161,6 +163,8 @@ def audio_fingerprint(audios: DataFrame, n_bands: int = 16, frame: int = 1024) -
                 fps[idx] = (
                     (full << np.arange(64, dtype=np.uint64)).sum(axis=1, dtype=np.uint64)
                 ).view(np.int64)
-            yield pdf[["audio_id"]].assign(fingerprint=fps)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("audio_id"), pa.array(fps)], ["audio_id", "fingerprint"]
+            )
 
-    return audios.mapInPandas(op, "audio_id string, fingerprint long")
+    return audios.mapInArrow(op, "audio_id string, fingerprint long")

@@ -132,6 +132,24 @@ def tile_assign(df: DataFrame, lon: str = "lon_c", lat: str = "lat_c", z: int = 
     return df.withColumn("tile_z", F.lit(z)).withColumn("tile_x", xt).withColumn("tile_y", yt)
 
 
+def _ancestor_rows(tiles: DataFrame, z_to: int, *cols) -> DataFrame:
+    """Each tile row once per ancestor level z_to..tile_z, as
+    (out_z, out_x, out_y, *cols) with the parent coords shifted right
+    by the level difference — the body of both pyramid rollups."""
+    zc = F.col("tile_z")
+    # rows already coarser than z_to cannot be represented at a finer
+    # level: without this filter F.sequence(z_to, tile_z) descends and
+    # shiftright gets a negative count, which the JVM masks mod 64 into
+    # a large positive shift — silently wrong coordinates (ADVICE r4).
+    t = tiles.where(zc >= F.lit(z_to)).withColumn("_l", F.explode(F.sequence(F.lit(z_to), zc)))
+    return t.select(
+        F.col("_l").alias("out_z"),
+        F.expr("shiftright(tile_x, tile_z - _l)").alias("out_x"),
+        F.expr("shiftright(tile_y, tile_z - _l)").alias("out_y"),
+        *cols,
+    )
+
+
 def tile_rollup(
     tiles: DataFrame,
     z_to: int,
@@ -153,20 +171,8 @@ def tile_rollup(
     log-depth lineage; one wide aggregation wins on a cluster unless
     levels are reused incrementally.
     """
-    zc = F.col("tile_z")
-    # rows already coarser than z_to cannot be represented at a finer
-    # level: without this filter F.sequence(z_to, tile_z) descends and
-    # shiftright gets a negative count, which the JVM masks mod 64 into
-    # a large positive shift — silently wrong coordinates (ADVICE r4).
-    lvl = F.explode(F.sequence(F.lit(z_to), zc))
-    t = tiles.where(zc >= F.lit(z_to)).withColumn("_l", lvl)
     weight = F.lit(1).cast("long") if count_col is None else F.col(count_col).cast("long")
-    t = t.select(
-        F.col("_l").alias("out_z"),
-        F.expr("shiftright(tile_x, tile_z - _l)").alias("out_x"),
-        F.expr("shiftright(tile_y, tile_z - _l)").alias("out_y"),
-        weight.alias("_w"),
-    )
+    t = _ancestor_rows(tiles, z_to, weight.alias("_w"))
     return (
         t.groupBy("out_z", "out_x", "out_y")
         .agg(F.sum("_w").alias(out_col))
@@ -197,24 +203,8 @@ def tile_rollup_stats(
     levels, ONE map-side-combined hash aggregate for the entire
     pyramid, no per-level iteration, no window.
     """
-    zc = F.col("tile_z")
-    # same coarse-row guard as tile_rollup: shiftright with a negative
-    # count silently wraps (ADVICE r4)
-    lvl = F.explode(F.sequence(F.lit(z_to), zc))
-    t = tiles.where(zc >= F.lit(z_to)).withColumn("_l", lvl)
-    wt = (
-        F.lit(1).cast("long")
-        if weight_col is None
-        else F.col(weight_col).cast("long")
-    )
-    v = F.col(val_col).cast("long")
-    t = t.select(
-        F.col("_l").alias("out_z"),
-        F.expr("shiftright(tile_x, tile_z - _l)").alias("out_x"),
-        F.expr("shiftright(tile_y, tile_z - _l)").alias("out_y"),
-        wt.alias("_w"),
-        v.alias("_v"),
-    )
+    wt = F.lit(1).cast("long") if weight_col is None else F.col(weight_col).cast("long")
+    t = _ancestor_rows(tiles, z_to, wt.alias("_w"), F.col(val_col).cast("long").alias("_v"))
     return (
         t.groupBy("out_z", "out_x", "out_y")
         .agg(

@@ -57,8 +57,8 @@ def _replace(b: pa.RecordBatch, **cols) -> pa.RecordBatch:
 
 
 def _ahash_arrow_op(meta_cols: list[str]):
-    """mapInArrow op: per batch, group rows by (fmt,w,h) and compute
-    the ahash for each group straight off the Arrow buffers
+    """mapInArrow op: per batch, group rows by ``codec.image_keys`` and
+    compute the ahash for each group straight off the Arrow buffers
     (kernels/codec.ahash_group_from_buffers) — the batched scale path
     for the zlib formats."""
 
@@ -67,12 +67,9 @@ def _ahash_arrow_op(meta_cols: list[str]):
 
         tune_worker()
         for b in batches:
-            col = b.column("bytes")
-            if col.null_count:
-                raise ValueError("NULL 'bytes' in image batch")
-            starts, ends, data = _codec.binary_buffers(col)
+            starts, ends, data = _codec.binary_buffers(b.column("bytes"))
             out = np.zeros(b.num_rows, dtype=np.int64)
-            for (fmt, w, h), rows in _codec.shape_groups(b, ("fmt", "w", "h")):
+            for fmt, w, h, rows in _codec.image_keys(b):
                 out[rows] = _codec.ahash_group_from_buffers(
                     data, starts[rows], ends[rows], fmt, w, h
                 )

@@ -23,9 +23,11 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gfp_gdal_spark.functions.worker_tuning import tune_worker
 from gfp_gdal_spark.kernels import codec as _codec
+from gfp_gdal_spark.kernels.geom import arrow_list_level
 
 __all__ = [
     "raster_stats",
@@ -59,83 +61,104 @@ def stack_bands(
     harmonized ``nodata_fill`` in every band (the std::replace of
     gdal_nodes.cpp:327-329). Values are clipped to 0..255 uint8 for
     the sandbox codecs (a real GTiff sink would keep float32 — format
-    boundary, not engine semantics). mapInPandas; numpy stack + encode.
+    boundary, not engine semantics). One mapInArrow pass: rows group by
+    (w, h) (``codec.shape_groups``), each group's bands are gathered
+    off the list value buffers by offset and encoded with one
+    ``encode_group``. A NULL band or one whose length is not w*h
+    raises, naming the column.
     """
     if fmt == "ppm" and len(band_cols) != 3:
         raise ValueError("ppm encodes exactly 3 bands; use pgm for 1")
     if fmt == "pgm" and len(band_cols) != 1:
         raise ValueError("pgm encodes exactly 1 band")
 
-    out_fields = [f for f in images.schema.fields if f.name != out_col]
-    schema_str = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-    schema_str += f", {out_col} binary, fmt string"
-    keep = [f.name for f in out_fields]
-
-    nb = len(band_cols)
+    kept = [f for f in images.schema.fields if f.name not in (out_col, "fmt")]
+    keep = [f.name for f in kept]
+    schema = T.StructType(kept + [T.StructField(out_col, T.BinaryType()), T.StructField("fmt", T.StringType())])
 
     def op(batches):
-        # whole-batch shape: rows group by (w, h) — one numpy stack /
-        # nodata pass / clip and ONE codec.encode_group per uniform
-        # group, mirroring operators/audio._grouped; per-row Python is
-        # just the band-array gather and the blob scatter (memcpy-level)
-        for pdf in batches:
-            blobs: list = [None] * len(pdf)
-            for (w, h), idx in pdf.groupby(["w", "h"], sort=False).indices.items():
-                w, h = int(w), int(h)
-                stack = np.stack(
-                    [
-                        np.stack(
-                            [np.asarray(v, dtype=np.float64) for v in pdf[c].iloc[idx]]
-                        )
-                        for c in band_cols
-                    ],
-                    axis=-1,
-                ).reshape(len(idx), h, w, nb)
+        tune_worker()
+        for b in batches:
+            bands = []
+            for c in band_cols:
+                if b.column(c).null_count:
+                    raise ValueError(f"NULL band {c!r} in batch")
+                off, vals, _ = arrow_list_level(b.column(c))
+                bands.append((c, off, vals.to_numpy(zero_copy_only=False)))
+            parts = []
+            for (w, h), rows in _codec.shape_groups(b, ("w", "h")):
+                span = np.arange(w * h)
+                stack = np.empty((len(rows), w * h, len(bands)))
+                for k, (c, off, vals) in enumerate(bands):
+                    if (np.diff(off)[rows] != w * h).any():
+                        raise ValueError(f"band {c!r} length is not w*h = {w * h}")
+                    stack[:, :, k] = vals[off[rows][:, None] + span]
                 if nodata is not None:
                     stack[stack == nodata] = nodata_fill
-                pix = np.clip(stack, 0, 255).astype(np.uint8)
-                if nb == 1:
-                    pix = pix[..., 0]
-                enc = _codec.encode_group(pix, fmt)
-                for j, i in enumerate(idx):
-                    blobs[i] = enc[j]
-            out = pdf[keep].copy()
-            out[out_col] = blobs
-            out["fmt"] = fmt
-            yield out
+                pix = np.clip(stack, 0, 255).astype(np.uint8).reshape(len(rows), h, w, -1)
+                parts.append((rows, _codec.encode_group(pix[..., 0] if len(bands) == 1 else pix, fmt)))
+            yield pa.RecordBatch.from_arrays(
+                [b.column(c) for c in keep]
+                + [_codec.blobs_by_row(parts), pa.array([fmt] * b.num_rows, pa.string())],
+                keep + [out_col, "fmt"],
+            )
 
-    return images.mapInPandas(op, schema_str)
+    return images.mapInArrow(op, schema)
+
+
+def _stats_batch(b: pa.RecordBatch, band: int) -> pa.RecordBatch:
+    """raster_stats over one batch, in row order: min/max/mean of
+    ``band`` once per uniform group tensor."""
+    n = b.num_rows
+    mn, mx, me = np.zeros(n), np.zeros(n), np.zeros(n)
+    for _f, _w, _h, rows, pix in _codec.image_groups(b):
+        ch = pix[..., band] if pix.ndim == 4 else pix
+        mn[rows], mx[rows], me[rows] = ch.min(axis=(1, 2)), ch.max(axis=(1, 2)), ch.mean(axis=(1, 2))
+    return pa.RecordBatch.from_arrays(
+        [b.column("image_id"), pa.array(np.full(n, band, np.int32)),
+         pa.array(mn), pa.array(mx), pa.array(me)],
+        ["image_id", "band", "px_min", "px_max", "px_mean"],
+    )
 
 
 def raster_stats(images: DataFrame, band: int = 0) -> DataFrame:
     """Per-image band min/max/mean — the GDALReader stats report
-    (gdal_nodes.cpp:385-389) as a DataFrame instead of stdout."""
+    (gdal_nodes.cpp:385-389) as a DataFrame instead of stdout. A gray
+    image reports its one channel for every ``band``. Image dims come
+    from the ``w``/``h`` columns; a blob whose header disagrees raises
+    (``codec.image_keys``)."""
     schema = "image_id string, band int, px_min double, px_max double, px_mean double"
 
     def op(batches):
         tune_worker()
         for b in batches:
-            names = b.schema.names
-            blobs = b.column(names.index("bytes"))
-            fmts = b.column(names.index("fmt")).to_pylist()
-            n = b.num_rows
-            mn, mx, me = np.zeros(n), np.zeros(n), np.zeros(n)
-            for i in range(n):
-                pix = _codec.decode_image(blobs[i].as_py(), fmts[i])
-                ch = pix[..., band] if pix.ndim == 3 else pix
-                mn[i], mx[i], me[i] = float(ch.min()), float(ch.max()), float(ch.mean())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(names.index("image_id")),
-                    pa.array(np.full(n, band, dtype=np.int32)),
-                    pa.array(mn),
-                    pa.array(mx),
-                    pa.array(me),
-                ],
-                names=["image_id", "band", "px_min", "px_max", "px_mean"],
-            )
+            yield _stats_batch(b, band)
 
-    return images.mapInArrow(op, schema)
+    return images.select("image_id", "bytes", "fmt", "w", "h").mapInArrow(op, schema)
+
+
+def _points_batch(b: pa.RecordBatch, band: int, thin_nth: int):
+    """raster_to_points over one batch: the pixel grid of each uniform
+    group tensor with the footprint geotransform applied to the whole
+    group at once. Rows leave grouped, in group order."""
+    lon_c, lat_c, dlon, dlat = (
+        b.column(c).to_numpy(zero_copy_only=False) for c in ("lon_c", "lat_c", "dlon", "dlat")
+    )
+    for _f, w, h, rows, pix in _codec.image_groups(b):
+        m = len(rows)
+        ch = (pix[..., band] if pix.ndim == 4 else pix).astype(np.float64)
+        # pixel (r, c) center -> lon/lat inside the footprint bbox
+        # (north-up, like a GDAL geotransform)
+        xs = (lon_c[rows] - dlon[rows])[:, None] + (np.arange(w) + 0.5) * (2 * dlon[rows] / w)[:, None]
+        ys = (lat_c[rows] + dlat[rows])[:, None] - (np.arange(h) + 0.5) * (2 * dlat[rows] / h)[:, None]
+        keep = np.arange(0, h * w, thin_nth)
+        x = np.broadcast_to(xs[:, None, :], (m, h, w)).reshape(m, -1)[:, keep]
+        y = np.broadcast_to(ys[:, :, None], (m, h, w)).reshape(m, -1)[:, keep]
+        yield pa.RecordBatch.from_arrays(
+            [b.column("image_id").take(pa.array(np.repeat(rows, len(keep)))),
+             pa.array(x.ravel()), pa.array(y.ravel()), pa.array(ch.reshape(m, -1)[:, keep].ravel())],
+            ["image_id", "x", "y", "z"],
+        )
 
 
 def raster_to_points(
@@ -152,7 +175,9 @@ def raster_to_points(
     never materializes skipped pixels).
 
     Requires footprint columns (lon_c/lat_c/dlon/dlat) — apply
-    functions.spatial.with_footprint first. Fan-out is h*w/thin_nth
+    functions.spatial.with_footprint first. The pixel grid is the
+    ``w``/``h`` columns'; a blob whose header disagrees raises
+    (``codec.image_keys``). Fan-out is h*w/thin_nth
     rows per image: at scale, partition the input so
     rows_out-per-task stays bounded.
     """
@@ -161,48 +186,9 @@ def raster_to_points(
     def op(batches):
         tune_worker()
         for b in batches:
-            names = b.schema.names
-            blobs = b.column(names.index("bytes"))
-            fmts = b.column(names.index("fmt")).to_pylist()
-            ids = b.column(names.index("image_id")).to_pylist()
-            lon_c = b.column(names.index("lon_c")).to_numpy(zero_copy_only=False)
-            lat_c = b.column(names.index("lat_c")).to_numpy(zero_copy_only=False)
-            dlon = b.column(names.index("dlon")).to_numpy(zero_copy_only=False)
-            dlat = b.column(names.index("dlat")).to_numpy(zero_copy_only=False)
-            out_id, out_x, out_y, out_z = [], [], [], []
-            for i in range(b.num_rows):
-                pix = _codec.decode_image(blobs[i].as_py(), fmts[i])
-                ch = (pix[..., band] if pix.ndim == 3 else pix).astype(np.float64)
-                h, w = ch.shape
-                # geotransform: pixel (r, c) center -> lon/lat inside the
-                # footprint bbox (north-up, like a GDAL geotransform)
-                xs = lon_c[i] - dlon[i] + (np.arange(w) + 0.5) * (2 * dlon[i] / w)
-                ys = lat_c[i] + dlat[i] - (np.arange(h) + 0.5) * (2 * dlat[i] / h)
-                gx, gy = np.meshgrid(xs, ys)
-                flat_x, flat_y, flat_z = gx.ravel(), gy.ravel(), ch.ravel()
-                if thin_nth > 1:
-                    flat_x = flat_x[::thin_nth]
-                    flat_y = flat_y[::thin_nth]
-                    flat_z = flat_z[::thin_nth]
-                out_id.append(np.full(len(flat_x), i, dtype=np.int64))
-                out_x.append(flat_x)
-                out_y.append(flat_y)
-                out_z.append(flat_z)
-            if not out_id:
-                continue
-            idx = np.concatenate(out_id)
-            id_arr = pa.array(np.asarray(ids, dtype=object)[idx])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    id_arr,
-                    pa.array(np.concatenate(out_x)),
-                    pa.array(np.concatenate(out_y)),
-                    pa.array(np.concatenate(out_z)),
-                ],
-                names=["image_id", "x", "y", "z"],
-            )
+            yield from _points_batch(b, band, thin_nth)
 
-    cols = ["image_id", "bytes", "fmt", "lon_c", "lat_c", "dlon", "dlat"]
+    cols = ["image_id", "bytes", "fmt", "w", "h", "lon_c", "lat_c", "dlon", "dlat"]
     return images.select(*cols).mapInArrow(op, schema)
 
 
@@ -240,6 +226,32 @@ def flatten_multipolygon(df: DataFrame, parts: str = "parts") -> DataFrame:
     return exploded
 
 
+def _children(b: pa.RecordBatch, col: str) -> tuple[np.ndarray, pa.RecordBatch]:
+    """The ``collect_list<struct>`` column ``col`` of a batch as (the
+    parent row of every child, one flat child batch of the struct
+    fields)."""
+    lst = b.column(col)
+    return pc.list_parent_indices(lst).to_numpy(), pa.RecordBatch.from_struct_array(pc.list_flatten(lst))
+
+
+def _parent_groups(parent: np.ndarray, kids: pa.RecordBatch, n: int, what: str):
+    """``codec.image_groups`` over a child batch of ``n`` parent rows:
+    yield ``(fmt, w, h, rows, pix, ps, pos)`` per group, ``ps`` the
+    group's parents (ascending) and ``pos`` each child's index into
+    ``ps``. A parent whose children fall in two groups raises
+    ``what``."""
+    owner, keys = np.full(n, -1), []
+    for f, w, h, rows, pix in _codec.image_groups(kids):
+        ps, pos = np.unique(parent[rows], return_inverse=True)
+        key = (f, w, h, 1 if pix.ndim == 3 else pix.shape[3])
+        seen = owner[ps][owner[ps] >= 0]
+        if seen.size:
+            raise ValueError(f"{what}: {keys[seen[0]]} vs {key}")
+        owner[ps] = len(keys)
+        keys.append(key)
+        yield f, w, h, rows, pix, ps, pos
+
+
 def downsample_tiles(
     tiles: DataFrame,
     fill: int = 0,
@@ -260,17 +272,17 @@ def downsample_tiles(
     Plan: children shuffle ONCE to their parent key
     (groupBy + collect_list of <=4 blobs — bounded fan-in, so the agg
     state per key is 4 tiles no matter the corpus size), then a
-    mapInPandas pass does ALL pixel work whole-batch: per uniform
-    (fmt, w, h) group one decode_group, FOUR vectorized quadrant
-    placements (children of the same quadrant land in one fancy-index
-    assignment), one reshape-mean pool, one encode_group. Per-child
-    Python is only the dict gather off the collect_list structs
-    (memcpy-level, same as stack_bands' band gather).
+    mapInArrow pass does ALL pixel work whole-batch: the collected
+    children are flattened into one child batch read by
+    ``codec.image_groups``; per uniform group one decode, ONE
+    quadrant-placement assignment, one reshape-mean pool, one
+    encode_group. Rows leave grouped, in group order.
 
-    Fail-loud: mixed (fmt, w, h) within a parent, duplicate quadrant
-    (duplicate child coords), or odd tile dims raise. Tile shape comes
-    from the input_hint ``w``/``h`` columns (no header probing).
-    Iterate levels with ``tile_pyramid_images``.
+    Fail-loud: negative tile coordinates, duplicate quadrant
+    (duplicate child coords), mixed (fmt, w, h) or channel count
+    within a parent, or odd tile dims raise. Tile shape comes from the
+    input_hint ``w``/``h`` columns (no header probing). Iterate levels
+    with ``tile_pyramid_images``.
     """
     child = tiles.select(
         (F.col(tile_z) - 1).cast("int").alias("_pz"),
@@ -278,14 +290,15 @@ def downsample_tiles(
         F.shiftright(F.col(tile_y).cast("long"), 1).alias("_py"),
         (F.col(tile_x).cast("long") % 2).cast("int").alias("_qx"),
         (F.col(tile_y).cast("long") % 2).cast("int").alias("_qy"),
-        F.col("w").cast("int").alias("_w"),
-        F.col("h").cast("int").alias("_h"),
-        F.col(bytes_col).alias("_b"),
-        F.col(fmt_col).alias("_f"),
+        F.col("w").cast("int").alias("w"),
+        F.col("h").cast("int").alias("h"),
+        F.col(bytes_col).alias("bytes"),
+        F.col(fmt_col).alias("fmt"),
     )
     g = child.groupBy("_pz", "_px", "_py").agg(
-        F.collect_list(F.struct("_qx", "_qy", "_w", "_h", "_b", "_f")).alias("_ch")
+        F.collect_list(F.struct("_qx", "_qy", "w", "h", "bytes", "fmt")).alias("_ch")
     )
+    names = [tile_z, tile_x, tile_y, "w", "h", bytes_col, fmt_col]
     schema = (
         f"{tile_z} int, {tile_x} long, {tile_y} long, "
         f"w int, h int, {bytes_col} binary, {fmt_col} string"
@@ -293,120 +306,45 @@ def downsample_tiles(
 
     def op(batches):
         tune_worker()
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            # gather children flat: parent idx, quadrant, blob, fmt
-            p_idx: list[int] = []
-            qxs: list[int] = []
-            qys: list[int] = []
-            blobs: list[bytes] = []
-            fmts: list[str] = []
-            shapes: list[tuple] = []
-            # negative tile coords: Spark % keeps the sign, so an ODD
-            # negative x gives quadrant -1, but an EVEN negative x
-            # gives quadrant 0 and would silently place pixels under a
-            # wrong (negative) parent. shiftright of ANY negative long
-            # is negative, so the parent coords catch every case —
-            # slippy z/x/y tiles are non-negative by definition.
-            if (pdf["_px"].to_numpy() < 0).any() or (
-                pdf["_py"].to_numpy() < 0
-            ).any():
+        for b in batches:
+            z, x, y = (b.column(c) for c in ("_pz", "_px", "_py"))
+            # Spark % keeps the sign, so an EVEN negative x would give
+            # quadrant 0 under a wrong (negative) parent; shiftright of
+            # ANY negative long is negative, so the parent coords catch
+            # every case — slippy z/x/y tiles are non-negative.
+            if (x.to_numpy(zero_copy_only=False) < 0).any() or (y.to_numpy(zero_copy_only=False) < 0).any():
                 raise ValueError(
                     "negative tile coordinates — slippy z/x/y tiles "
                     "must be non-negative"
                 )
-            for i, ch in enumerate(pdf["_ch"]):
-                seen = set()
-                for c in ch:
-                    # the parent-coordinate sign guard above already
-                    # rejected every negative input, so quadrants here
-                    # are always in {0,1}x{0,1}
-                    q = (c["_qx"], c["_qy"])
-                    if q in seen:
-                        raise ValueError(
-                            f"duplicate child quadrant {q} under parent "
-                            f"{(pdf['_pz'].iat[i], pdf['_px'].iat[i], pdf['_py'].iat[i])}"
-                        )
-                    seen.add(q)
-                    p_idx.append(i)
-                    qxs.append(c["_qx"])
-                    qys.append(c["_qy"])
-                    blobs.append(c["_b"])
-                    fmts.append(c["_f"])
-                    shapes.append((c["_w"], c["_h"]))
-            # uniform (fmt, w, h) groups; parent shape = child shape
-            par_shape: dict[int, tuple] = {}
-            for i, f, (w, h) in zip(p_idx, fmts, shapes):
-                key = (f, int(w), int(h))
-                if par_shape.setdefault(i, key) != key:
-                    raise ValueError(
-                        f"mixed child (fmt, w, h) under one parent: "
-                        f"{par_shape[i]} vs {key}"
-                    )
-            import collections
-
-            groups: dict[tuple, list[int]] = collections.defaultdict(list)
-            for i, key in par_shape.items():
-                groups[key].append(i)
-            out_w = np.zeros(n, dtype=np.int32)
-            out_h = np.zeros(n, dtype=np.int32)
-            out_b: list = [None] * n
-            out_f: list = [None] * n
-            child_of = collections.defaultdict(list)
-            for ci, i in enumerate(p_idx):
-                child_of[i].append(ci)
-            for (f, w, h), parents in groups.items():
+            parent, kids = _children(b, "_ch")
+            qx, qy = kids.column("_qx").to_numpy(), kids.column("_qy").to_numpy()
+            u, cnt = np.unique(parent * 4 + qy * 2 + qx, return_counts=True)
+            if (cnt > 1).any():
+                d = int(u[cnt > 1][0])
+                i = d // 4
+                raise ValueError(
+                    f"duplicate child quadrant {(d % 2, d // 2 % 2)} under parent "
+                    f"{tuple(c[i].as_py() for c in (z, x, y))}"
+                )
+            what = "mixed child (fmt, w, h, channels) under one parent"
+            for f, w, h, rows, pix, ps, pos in _parent_groups(parent, kids, b.num_rows, what):
                 if w % 2 or h % 2:
                     raise ValueError(f"tile dims must be even, got {(w, h)}")
-                cis = [ci for i in parents for ci in child_of[i]]
-                pix = _codec.decode_group([blobs[ci] for ci in cis], f, w, h)
-                nch = 3 if pix.ndim == 4 else 1
-                m = len(parents)
-                pos = {i: j for j, i in enumerate(parents)}
-                canvas = np.full(
-                    (m, 2 * h, 2 * w) + ((3,) if nch == 3 else ()),
-                    fill,
-                    dtype=np.float64,
+                # (parent, qy, row, qx, col) is the 2h x 2w canvas
+                canvas = np.full((len(ps), 2, h, 2, w) + pix.shape[3:], fill, np.float64)
+                canvas[pos, qy[rows], :, qx[rows]] = pix
+                pooled = canvas.reshape((len(ps), h, 2, w, 2) + pix.shape[3:]).mean(axis=(2, 4))
+                take, m = pa.array(ps), len(ps)
+                yield pa.RecordBatch.from_arrays(
+                    [z.take(take), x.take(take), y.take(take),
+                     pa.array(np.full(m, w, np.int32)), pa.array(np.full(m, h, np.int32)),
+                     pa.array(_codec.encode_group(np.clip(np.rint(pooled), 0, 255).astype(np.uint8), f), pa.binary()),
+                     pa.array([f] * m, pa.string())],
+                    names,
                 )
-                cq = np.array([[qys[ci], qxs[ci], pos[p_idx[ci]]] for ci in cis])
-                for qy in (0, 1):
-                    for qx in (0, 1):
-                        sel = (cq[:, 0] == qy) & (cq[:, 1] == qx)
-                        if not sel.any():
-                            continue
-                        canvas[
-                            cq[sel, 2],
-                            qy * h : (qy + 1) * h,
-                            qx * w : (qx + 1) * w,
-                        ] = pix[np.flatnonzero(sel)]
-                pooled = canvas.reshape(
-                    (m, h, 2, w, 2) + ((3,) if nch == 3 else ())
-                ).mean(axis=(2, 4))
-                enc = _codec.encode_group(
-                    np.clip(np.rint(pooled), 0, 255).astype(np.uint8), f
-                )
-                for j, i in enumerate(parents):
-                    out_b[i] = enc[j]
-                    out_f[i] = f
-                    out_w[i] = w
-                    out_h[i] = h
-            import pandas as pd
 
-            yield pd.DataFrame(
-                {
-                    tile_z: pdf["_pz"].astype("int32"),
-                    tile_x: pdf["_px"].astype("int64"),
-                    tile_y: pdf["_py"].astype("int64"),
-                    "w": out_w,
-                    "h": out_h,
-                    bytes_col: out_b,
-                    fmt_col: out_f,
-                }
-            )
-
-    return g.mapInPandas(op, schema)
+    return g.mapInArrow(op, schema)
 
 
 def tile_pyramid_images(tiles: DataFrame, z_from: int, z_to: int, **kw) -> DataFrame:
@@ -449,11 +387,13 @@ def mosaic_composite(
     per-tile shuffle and Python-side state are bounded by max_layers
     regardless of how many scenes pile on a hot tile (the same
     bounded-fan-in idea as downsample_tiles' 4 quadrants). Then one
-    groupBy collects the kept layers and a mapInPandas pass does all
-    pixel work whole-batch per uniform (fmt, w, h) group: one
-    decode_group over every layer in the batch, one vectorized
-    first-valid-layer argmax over a rank-ordered padded tensor, one
-    encode_group. Fail-loud on mixed child (fmt, w, h) within a tile.
+    groupBy collects the kept layers and a mapInArrow pass does all
+    pixel work whole-batch: the layers are flattened into one child
+    batch read by ``codec.image_groups``; per uniform group one
+    decode, one vectorized first-valid-layer argmax over a
+    rank-ordered padded tensor, one encode_group. Rows leave grouped,
+    in group order. Fail-loud on mixed (fmt, w, h) or channel count
+    within a tile.
     """
     from pyspark.sql import Window
 
@@ -468,10 +408,10 @@ def mosaic_composite(
             F.col(tile_y).cast("long").alias("_ty"),
             F.col(priority).alias("_p"),
             F.col(id_col).alias("_iid"),
-            F.col("w").cast("int").alias("_w"),
-            F.col("h").cast("int").alias("_h"),
-            F.col(bytes_col).alias("_b"),
-            F.col(fmt_col).alias("_f"),
+            F.col("w").cast("int").alias("w"),
+            F.col("h").cast("int").alias("h"),
+            F.col(bytes_col).alias("bytes"),
+            F.col(fmt_col).alias("fmt"),
         )
         .withColumn("_rn", F.row_number().over(
             Window.partitionBy("_tx", "_ty").orderBy(
@@ -481,9 +421,10 @@ def mosaic_composite(
         .where(F.col("_rn") <= max_layers)
     )
     g = d.groupBy("_tx", "_ty").agg(
-        F.collect_list(F.struct("_rn", "_w", "_h", "_b", "_f")).alias("_ly"),
-        F.count(F.lit(1)).alias("_nl"),
+        F.collect_list(F.struct("_rn", "w", "h", "bytes", "fmt")).alias("_ly"),
+        F.count(F.lit(1)).cast("int").alias("_nl"),
     )
+    names = [tile_x, tile_y, "n_layers", "w", "h", bytes_col, fmt_col]
     schema = (
         f"{tile_x} long, {tile_y} long, n_layers int, "
         f"w int, h int, {bytes_col} binary, {fmt_col} string"
@@ -491,79 +432,30 @@ def mosaic_composite(
     nd = nodata
 
     def op(batches):
-        import collections
-
-        import pandas as pd
-
         tune_worker()
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            tile_shape: dict[int, tuple] = {}
-            flat = []  # (tile_idx, rank, blob)
-            for i, ly in enumerate(pdf["_ly"]):
-                for c in ly:
-                    key = (c["_f"], int(c["_w"]), int(c["_h"]))
-                    if tile_shape.setdefault(i, key) != key:
-                        raise ValueError(
-                            f"mixed layer (fmt, w, h) within one tile: "
-                            f"{tile_shape[i]} vs {key}"
-                        )
-                    flat.append((i, int(c["_rn"]), c["_b"]))
-            groups: dict[tuple, list[int]] = collections.defaultdict(list)
-            for i, key in tile_shape.items():
-                groups[key].append(i)
-            lay_of = collections.defaultdict(list)
-            for j, (i, rn, b) in enumerate(flat):
-                lay_of[i].append(j)
-            out_b: list = [None] * n
-            out_f: list = [None] * n
-            out_w = np.zeros(n, dtype=np.int32)
-            out_h = np.zeros(n, dtype=np.int32)
-            for (f, w, h), tidx in groups.items():
-                js = [j for i in tidx for j in lay_of[i]]
-                pix = _codec.decode_group([flat[j][2] for j in js], f, w, h)
-                nch = 3 if pix.ndim == 4 else 1
-                L = max(len(lay_of[i]) for i in tidx)
-                m = len(tidx)
-                pos = {i: t for t, i in enumerate(tidx)}
-                tensor = np.full(
-                    (m, L, h, w) + ((3,) if nch == 3 else ()), nd, dtype=pix.dtype
+        for b in batches:
+            parent, kids = _children(b, "_ly")
+            rn = kids.column("_rn").to_numpy()
+            what = "mixed layer (fmt, w, h, channels) within one tile"
+            for f, w, h, rows, pix, ps, pos in _parent_groups(parent, kids, b.num_rows, what):
+                # (tile, rank) padded with all-nodata layers
+                tensor = np.full((len(ps), int(rn[rows].max())) + pix.shape[1:], nd, pix.dtype)
+                tensor[pos, rn[rows] - 1] = pix
+                valid = (tensor != nd).any(axis=-1) if pix.ndim == 4 else tensor != nd
+                first = valid.argmax(axis=1)[:, None]  # first valid layer (0 if none)
+                if pix.ndim == 4:
+                    first = first[..., None]
+                comp = np.take_along_axis(tensor, first, axis=1)[:, 0]
+                take, m = pa.array(ps), len(ps)
+                yield pa.RecordBatch.from_arrays(
+                    [b.column(c).take(take) for c in ("_tx", "_ty", "_nl")]
+                    + [pa.array(np.full(m, w, np.int32)), pa.array(np.full(m, h, np.int32)),
+                       pa.array(_codec.encode_group(comp, f), pa.binary()),
+                       pa.array([f] * m, pa.string())],
+                    names,
                 )
-                for jj, j in enumerate(js):
-                    i, rn, _ = flat[j]
-                    tensor[pos[i], rn - 1] = pix[jj]
-                valid = (
-                    (tensor != nd).any(axis=-1) if nch == 3 else (tensor != nd)
-                )  # (m, L, h, w)
-                first = valid.argmax(axis=1)  # first valid layer (0 if none)
-                idx = first[:, None, :, :]
-                if nch == 3:
-                    comp = np.take_along_axis(
-                        tensor, idx[..., None], axis=1
-                    )[:, 0]
-                else:
-                    comp = np.take_along_axis(tensor, idx, axis=1)[:, 0]
-                enc = _codec.encode_group(comp.astype(np.uint8), f)
-                for t, i in enumerate(tidx):
-                    out_b[i] = enc[t]
-                    out_f[i] = f
-                    out_w[i] = w
-                    out_h[i] = h
-            yield pd.DataFrame(
-                {
-                    tile_x: pdf["_tx"].astype("int64"),
-                    tile_y: pdf["_ty"].astype("int64"),
-                    "n_layers": pdf["_nl"].astype("int32"),
-                    "w": out_w,
-                    "h": out_h,
-                    bytes_col: out_b,
-                    fmt_col: out_f,
-                }
-            )
 
-    return g.mapInPandas(op, schema)
+    return g.mapInArrow(op, schema)
 
 
 def rasterize_zones(
@@ -595,7 +487,7 @@ def rasterize_zones(
     (``z``, ``broadcast``, ...) are accepted and have nothing to tune.
     Returns (key, w, h, n_burned, val_sum, bytes, fmt), counts exact.
     """
-    from gfp_gdal_spark.kernels.geom import arrow_list_level, ragged_from_arrow, scanline_burn
+    from gfp_gdal_spark.kernels.geom import ragged_from_arrow, scanline_burn
     from gfp_gdal_spark.operators.joins import ring_bbox_cols
 
     ring, holes = pip_kwargs.get("ring", "ring"), pip_kwargs.get("holes", "holes")

@@ -383,12 +383,12 @@ def stitch_regions(
     Plan shape at 10^12 pixels: the area-proportional work is ONE
     fused per-tile mapInArrow pass (``_labels_and_borders``: one
     decode + one labeling emits both the region rows and the border
-    rows; the pass is materialized via localCheckpoint so the label
+    rows; the pass is cut with an eager localCheckpoint so the label
     leg and the border leg both read the same blocks instead of
-    re-decoding); the stitch itself joins only PERIMETER rows
-    (O(sqrt(pixels)) per tile) via two equi-joins, then runs
-    connected_components over the resulting region-adjacency edge
-    list, whose size is bounded by total border length, not area.
+    re-decoding, and no cache outlives the call); the stitch itself
+    joins only PERIMETER rows (O(sqrt(pixels)) per tile) via two
+    equi-joins, then runs connected_components over the resulting
+    region-adjacency edge list, whose size is bounded by total border length, not area.
     4-connectivity only (diagonal stitching would need pos+-1
     matches; fail-loud).
     """
@@ -437,17 +437,16 @@ def stitch_regions(
             F.shiftleft(F.shiftleft(ty, _VID_BITS) + tx, _VID_BITS) + region
         )
 
-    # ONE decode for both legs: the fused pass is persisted LAZILY
-    # (output volume is regions + perimeters, O(sqrt(pixels)) per
-    # tile, never the raster area) — the stitch's first action (the
-    # edge/CC leg) materializes it and the label leg reads the same
-    # blocks; no extra blocking job, and the unfused shape's second
-    # full decode is gone. Cache eviction only re-derives (correct,
-    # just slower), and the ContextCleaner reclaims the blocks once
-    # the result DataFrame is dropped.
+    # ONE decode for both legs: the fused pass (regions + perimeters,
+    # O(sqrt(pixels)) per tile, never the raster area) is computed once
+    # by an eager localCheckpoint, and the edge/CC leg and the label leg
+    # read its blocks, so the unfused shape's second full decode is
+    # gone. The blocks live as long as the returned DataFrame, whose
+    # plan reads them; the ContextCleaner reclaims them after that, so
+    # no persist() is left to release.
     fused = _labels_and_borders(
         images, connectivity=connectivity, nodata=nodata
-    ).persist()
+    ).localCheckpoint(eager=True)
     borders = (
         fused.where(F.col("kind") != "G")
         .select(F.col("kind").alias("side"), "pos", "region", "val", "image_id")

@@ -1,6 +1,6 @@
 """The flat-row image-batch reader (kernels/codec.py): ``binary_buffers``,
-``shape_groups`` and ``image_groups`` against a per-row reference,
-over mixed ppm/pgm/png/qnt batches (no Spark).
+``shape_groups``, ``image_keys`` and ``image_groups`` against a per-row
+reference, over mixed ppm/pgm/png/qnt batches (no Spark).
 
 Covered edges: sliced batches (Arrow offset != 0), ``large_binary``
 blobs, the empty batch, PNGs whose scanlines use filters 1-4 (the
@@ -153,3 +153,84 @@ def test_null_key_or_blob_raises_naming_the_column(col):
     nb = pa.RecordBatch.from_arrays(arrays, b.schema.names)
     with pytest.raises(ValueError, match=f"NULL '{col}'"):
         list(C.image_groups(nb))
+
+
+@pytest.mark.parametrize("fmt", ["png", "qnt"])
+def test_mixed_channel_counts_decode_as_separate_groups(fmt):
+    """Gray and RGB blobs of one (fmt, w, h) carry different channel
+    counts; the reader keys on the count read off each header, so each
+    decodes as its own group and equals the per-image decode."""
+    w, h = 7, 4
+    gray = [i % 3 == 1 for i in range(9)]
+    blobs = [C.encode_image(C.synth_pixels(i, w, h, gray=g), fmt) for i, g in enumerate(gray)]
+    blobs.append(C.encode_image(C.synth_pixels(9, 3, 2), "ppm"))
+    n = len(blobs)
+    b = pa.RecordBatch.from_arrays(
+        [pa.array(blobs), pa.array([fmt] * (n - 1) + ["ppm"]),
+         pa.array([w] * (n - 1) + [3], pa.int32()), pa.array([h] * (n - 1) + [2], pa.int32())],
+        ["bytes", "fmt", "w", "h"],
+    ).slice(1)
+    got = list(C.image_groups(b))
+    # (fmt, w, h) first appearance, then channel count first appearance
+    keys = [(f, w_, h_, 1 if pix.ndim == 3 else 3, rows.tolist()) for f, w_, h_, rows, pix in got]
+    assert keys == [(fmt, w, h, 1, [0, 3, 6]), (fmt, w, h, 3, [1, 2, 4, 5, 7]), ("ppm", 3, 2, 3, [8])]
+    raw = b.column("bytes").to_pylist()
+    fmts = b.column("fmt").to_pylist()
+    for _, _, _, rows, pix in got:
+        want = np.stack([C.decode_image(raw[i], fmts[i]) for i in rows])
+        np.testing.assert_array_equal(pix, want)
+    # the buffer-level ahash path groups by the same keys
+    from gfp_gdal_spark.operators.multimodal import _ahash_arrow_op
+
+    (hb,) = _ahash_arrow_op(["fmt"])([b])
+    want = [int(C.ahash_batch(C.decode_image(r, f)[None])[0]) for r, f in zip(raw, fmts)]
+    assert hb.column("ahash").to_pylist() == want
+
+
+def _one_fmt(blobs, fmt, w, h) -> pa.RecordBatch:
+    n = len(blobs)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(blobs, pa.binary()), pa.array([fmt] * n),
+         pa.array([w] * n, pa.int32()), pa.array([h] * n, pa.int32())],
+        ["bytes", "fmt", "w", "h"],
+    )
+
+
+@pytest.mark.parametrize("fmt", FMTS)
+@pytest.mark.parametrize("cut", [0, 5], ids=["empty", "header_cut"])
+@pytest.mark.parametrize("last", [False, True], ids=["mid", "last"])
+def test_truncated_blob_raises(fmt, cut, last):
+    """A blob too short for its header raises a ValueError naming the
+    truncation, not an IndexError and not a read of the next blob's
+    bytes — also when it is the last blob of the data buffer."""
+    good = C.encode_image(C.synth_pixels(1, 7, 4, gray=fmt == "pgm"), fmt)
+    blobs = [good, good[:cut]] if last else [good[:cut], good]
+    with pytest.raises(ValueError, match="truncated"):
+        list(C.image_groups(_one_fmt(blobs, fmt, 7, 4)))
+
+
+@pytest.mark.parametrize("fmt", FMTS)
+def test_header_dims_must_match_the_w_h_columns(fmt):
+    """Swapped w/h columns (same w*h) raise instead of decoding a 4x7
+    image as 7x4."""
+    blob = C.encode_image(C.synth_pixels(1, 7, 4, gray=fmt == "pgm"), fmt)
+    with pytest.raises(ValueError, match="header is 7x4 but the w/h columns say 4x7"):
+        list(C.image_groups(_one_fmt([blob], fmt, 4, 7)))
+
+
+def test_pnm_header_with_comment_reads_through():
+    """A pnm header the encoder would not write (a comment line) is
+    parsed, not rejected."""
+    pix = C.synth_pixels(3, 5, 2)
+    blob = b"P6\n# scanner\n5 2\n255\n" + pix.tobytes()
+    ((_, _, _, _, got),) = C.image_groups(_one_fmt([blob], "ppm", 5, 2))
+    np.testing.assert_array_equal(got[0], pix)
+
+
+@pytest.mark.parametrize("head", [b"P6\n5 2\n255\n", b"P6\n# x\n5 2\n255\n"], ids=["plain", "comment"])
+def test_pnm_blob_longer_than_its_header_says_raises(head):
+    """The group decoder takes a pnm raster from the blob's end, so a
+    blob with trailing bytes raises instead of decoding shifted pixels."""
+    blob = head + C.synth_pixels(3, 5, 2).tobytes() + b"\x07"
+    with pytest.raises(ValueError, match="header says"):
+        list(C.image_groups(_one_fmt([blob], "ppm", 5, 2)))

@@ -7,7 +7,7 @@ against `.explain` output rather than taken on faith.
 - pip_join(broadcast=True) plans a BroadcastHashJoin;
 - pip_join(broadcast=False) plans a shuffle join (no broadcast);
 - every ring, holes and triangle function plans as a scalar Arrow UDF;
-- every flat-row image operator plans a MapInArrow, never a MapInPandas.
+- every image and audio operator plans a MapInArrow, never a MapInPandas.
 """
 
 import re
@@ -260,19 +260,24 @@ def test_ring_functions_plan_scalar_arrow_udf(spark):
 
 
 def test_image_ops_plan_map_in_arrow(spark):
-    """Every flat-row image operator reads its batches through the one
-    Arrow image reader (codec.image_groups): each plans a MapInArrow
-    node and no MapInPandas."""
+    """Every image and audio operator reads its batches through the one
+    Arrow media reader (codec.shape_groups / image_groups): each plans
+    a MapInArrow node and no MapInPandas."""
     from gfp_gdal_spark import pipelines as P
+    from gfp_gdal_spark.operators import audio as A
+    from gfp_gdal_spark.operators import map_algebra as MA
     from gfp_gdal_spark.operators import multimodal as MM
-    from gfp_gdal_spark.operators.raster import sample_raster
+    from gfp_gdal_spark.operators import raster as R
+    from gfp_gdal_spark.operators import vectorize as V
 
     images = spark.createDataFrame(
         [],
         "image_id string, bytes binary, w int, h int, fmt string, caption string, "
-        "phash long, aug_op string",
+        "phash long, aug_op string, lon_c double, lat_c double, dlon double, dlat double, "
+        "tile_z int, tile_x long, tile_y long, prio int, band0 array<double>",
     )
     probes = spark.createDataFrame([], "pid long, image_id string, px_r int, px_c int")
+    audios = spark.createDataFrame([], datagen.AUDIO_SCHEMA)
     ops = {
         "decode_and_hash": P.decode_and_hash(images),
         "image_stats": MM.image_stats(images),
@@ -284,7 +289,19 @@ def test_image_ops_plan_map_in_arrow(spark):
         "image_histogram": MM.image_histogram(images),
         "equalize_images": MM.equalize_images(images),
         "verify_pairs": MM.verify_pairs(images, images),
-        "sample_raster": sample_raster(probes, images),
+        "sample_raster": R.sample_raster(probes, images),
+        "stack_bands": R.stack_bands(images.drop("bytes", "fmt"), ["band0"], fmt="pgm"),
+        "raster_stats": R.raster_stats(images),
+        "raster_to_points": R.raster_to_points(images),
+        "downsample_tiles": R.downsample_tiles(images),
+        "mosaic_composite": R.mosaic_composite(images, "prio"),
+        "reproject_webmercator": R.reproject_webmercator(images),
+        "label_regions": V.label_regions(images),
+        "sieve_filter": V.sieve_filter(images, 4),
+        "band_index_stats": MA.band_index_stats(images),
+        "audio_stats": A.audio_stats(audios),
+        "resample_audio": A.resample_audio(audios, 4000),
+        "audio_fingerprint": A.audio_fingerprint(audios),
     }
     for name, df in ops.items():
         plan = plan_of(df)

@@ -1,6 +1,7 @@
 """Raster operator tests."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,3 +145,101 @@ def test_stack_bands_batched_bitwise_matches_per_image(spark):
         bands[bands == -1.0] = 3.0
         want = C.encode_image(np.clip(bands, 0, 255).astype(np.uint8), "png")
         assert got[f"im{i}"] == want, f"im{i} blob differs from per-image encode"
+
+
+def _mixed_footprint_batch() -> pa.RecordBatch:
+    """ppm, pgm, gray and RGB png, gray and RGB qnt over three shapes,
+    with footprints; gray and RGB blobs share (fmt, w, h)."""
+    rng = np.random.default_rng(11)
+    cols = {c: [] for c in ("image_id", "bytes", "fmt", "w", "h", "lon_c", "lat_c", "dlon", "dlat")}
+    for i in range(36):
+        fmt = ("ppm", "pgm", "png", "qnt")[i % 4]
+        w, h = ((5, 3), (8, 6), (4, 7))[i % 3]
+        gray = fmt == "pgm" or (fmt in ("png", "qnt") and i % 5 < 2)
+        vals = (i, C.encode_image(C.synth_pixels(i, w, h, gray=gray), fmt), fmt, w, h,
+                rng.uniform(-170, 170), rng.uniform(-80, 80), rng.uniform(1e-4, 0.3),
+                rng.uniform(1e-4, 0.3))
+        for c, v in zip(cols, vals):
+            cols[c].append(f"im{v}" if c == "image_id" else v)
+    types = [pa.string(), pa.binary(), pa.string(), pa.int32(), pa.int32()] + [pa.float64()] * 4
+    b = pa.RecordBatch.from_arrays(
+        [pa.array(v, t) for v, t in zip(cols.values(), types)], list(cols)
+    )
+    return b.slice(3, 30)  # offset != 0
+
+
+@pytest.mark.parametrize("band", [0, 2])
+def test_raster_stats_parity_with_per_image_decode(band):
+    """The grouped stats equal a per-image decode_image reference,
+    bit for bit: min and max are exact, and so is the mean, because a
+    sum of uint8 values is an exact integer in float64 whatever the
+    summation order."""
+    b = _mixed_footprint_batch()
+    got = R._stats_batch(b, band)
+    assert got.column("image_id").to_pylist() == b.column("image_id").to_pylist()
+    for i, (blob, fmt) in enumerate(zip(b.column("bytes").to_pylist(), b.column("fmt").to_pylist())):
+        pix = C.decode_image(blob, fmt)
+        ch = pix[..., band] if pix.ndim == 3 else pix
+        assert got.column("band")[i].as_py() == band
+        assert got.column("px_min")[i].as_py() == float(ch.min())
+        assert got.column("px_max")[i].as_py() == float(ch.max())
+        assert got.column("px_mean")[i].as_py() == float(ch.mean())
+
+
+@pytest.mark.parametrize("band,thin", [(0, 1), (2, 3)])
+def test_raster_to_points_parity_with_per_image_decode(band, thin):
+    """The grouped pointcloud equals a per-image decode_image and
+    meshgrid reference bit for bit (x, y and z), image by image."""
+    b = _mixed_footprint_batch()
+    got = pa.Table.from_batches(list(R._points_batch(b, band, thin)))
+    ids = np.asarray(got.column("image_id").to_pylist())
+    x, y, z = (got.column(c).to_numpy() for c in ("x", "y", "z"))
+    assert sorted(set(ids)) == sorted(b.column("image_id").to_pylist())
+    d = b.to_pydict()
+    for i, iid in enumerate(d["image_id"]):
+        pix = C.decode_image(d["bytes"][i], d["fmt"][i])
+        ch = (pix[..., band] if pix.ndim == 3 else pix).astype(np.float64)
+        h, w = ch.shape
+        lon_c, lat_c, dlon, dlat = (d[c][i] for c in ("lon_c", "lat_c", "dlon", "dlat"))
+        xs = lon_c - dlon + (np.arange(w) + 0.5) * (2 * dlon / w)
+        ys = lat_c + dlat - (np.arange(h) + 0.5) * (2 * dlat / h)
+        gx, gy = np.meshgrid(xs, ys)
+        sel = ids == iid
+        np.testing.assert_array_equal(x[sel], gx.ravel()[::thin])
+        np.testing.assert_array_equal(y[sel], gy.ravel()[::thin])
+        np.testing.assert_array_equal(z[sel], ch.ravel()[::thin])
+
+
+@pytest.mark.parametrize("bad", ["short", "null"])
+def test_stack_bands_bad_band_raises_naming_the_column(spark, bad):
+    """A band array whose length is not w*h, or a NULL band, raises a
+    ValueError that names the band column."""
+    from gfp_gdal_spark.operators.raster import stack_bands
+
+    w, h = 4, 3
+    g = None if bad == "null" else [1.0] * (w * h - 1)
+    ok = [2.0] * (w * h)
+    df = spark.createDataFrame(
+        [("a", w, h, ok, ok, ok), ("b", w, h, ok, g, ok)],
+        "image_id string, w int, h int, band_r array<double>, band_g array<double>, "
+        "band_b array<double>",
+    )
+    with pytest.raises(Exception, match=r"ValueError: .*'band_g'"):
+        stack_bands(df, ["band_r", "band_g", "band_b"]).collect()
+
+
+def test_raster_sinks_reject_w_h_that_disagree_with_the_blob():
+    """raster_stats and raster_to_points take the pixel grid from the
+    w/h columns; a row whose w/h are swapped against its blob header
+    raises instead of emitting a transposed grid."""
+    b = _mixed_footprint_batch()
+    i = next(k for k in range(b.num_rows) if b.column("w")[k].as_py() == 5)
+    w, h = b.column("w").to_pylist(), b.column("h").to_pylist()
+    w[i], h[i] = h[i], w[i]
+    cols = {c: b.column(c) for c in b.schema.names}
+    cols["w"], cols["h"] = pa.array(w, pa.int32()), pa.array(h, pa.int32())
+    bad = pa.RecordBatch.from_arrays(list(cols.values()), list(cols))
+    with pytest.raises(ValueError, match="header is 5x3 but the w/h columns say 3x5"):
+        R._stats_batch(bad, 0)
+    with pytest.raises(ValueError, match="header is 5x3 but the w/h columns say 3x5"):
+        list(R._points_batch(bad, 0, 1))

@@ -3376,6 +3376,25 @@ def test_stitch_regions_mixed_dims_fail_loud(spark):
         stitch_regions(df)
 
 
+def test_stitch_regions_releases_its_cache(spark):
+    """The fused label/border pass is cut with an eager localCheckpoint,
+    not cached: its blocks are the only persistent RDDs a call may
+    leave (they live as long as the result), so the count of cached,
+    non-checkpointed RDDs is unchanged."""
+    from gfp_gdal_spark.operators.vectorize import stitch_regions
+
+    def cached():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+        return sum(not r.rdd().isCheckpointed() for r in rdds)
+
+    before = cached()
+    grid = np.arange(16).reshape(4, 4) % 3
+    tiles = [(tx, ty, grid[2 * ty:2 * ty + 2, 2 * tx:2 * tx + 2]) for ty in (0, 1) for tx in (0, 1)]
+    out = stitch_regions(_tile_df(spark, tiles))
+    assert out.count() > 0
+    assert cached() == before
+
+
 def test_lr_quality_score_null_and_duplicate_ids(spark):
     """NULL ids keep their true counts (null-safe join) and duplicate
     ids still emit one row (distinct id universe)."""
